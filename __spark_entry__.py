@@ -1151,14 +1151,14 @@ SELECT f.doc_id, f.fp, s.simhash FROM fpt f LEFT JOIN sim s USING (doc_id)"""
 
 
 def _golden_sql(name: str) -> str:
-    """Literal VALUES oracle from data/goldens/<name>.json (generated by
+    """Literal VALUES oracle from tests/goldens/<name>.json (generated by
     tools/make_goldens.py, which cross-checks each table against an
     independent scalar re-computation).  Valid because these queries read
     only deterministic in-repo fixtures — no sf tables."""
     import json
     from pathlib import Path
 
-    p = Path(__file__).resolve().parent / "data" / "goldens" / f"{name}.json"
+    p = Path(__file__).resolve().parent / "tests" / "goldens" / f"{name}.json"
     g = json.loads(p.read_text())
     cols, types = g["columns"], g["types"]
 

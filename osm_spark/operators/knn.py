@@ -394,28 +394,3 @@ def brute_force_knn(points: DataFrame, features: DataFrame, k: int = 1,
     )
     cand = points.select(key, "lat", "lon").crossJoin(F.broadcast(feats))
     return _rank_topk(cand, key, k).select(key, "feature_id", "dist2", "rank")
-
-
-def nearest_feature_m(knn_out: DataFrame, points: DataFrame, features: DataFrame,
-                      key: str = "page_id") -> DataFrame:
-    """Attach haversine meters to kNN output (vectorized pandas UDF)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def hav_m(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            K.distance_m(
-                lat1.to_numpy(np.int64), lon1.to_numpy(np.int64),
-                lat2.to_numpy(np.int64), lon2.to_numpy(np.int64),
-            )
-        )
-
-    feats = features.select("feature_id", F.col("lat").alias("flat"), F.col("lon").alias("flon"))
-    j = (
-        knn_out.join(points.select(key, "lat", "lon"), key)
-        .join(F.broadcast(feats), "feature_id")
-    )
-    return j.withColumn("dist_m", hav_m("lat", "lon", "flat", "flon")).select(
-        key, "feature_id", "dist2", "rank", "dist_m"
-    )

@@ -9,22 +9,28 @@ cells (z-order prefix == slippy tile) as the spatial partitioning key:
      R-tree leaf bboxes in Hilbert order),
   2. pages → their containing cell (pure column expressions for x,
      Arrow pandas UDF mercator for y),
-  3. candidate join on cell — ``broadcast`` for small layers, else a
-     shuffle join with optional **salting** for hot cells + AQE skew
-     splitting,
-  4. exact PIP verify with a vectorized crossing-number kernel (Arrow
-     pandas UDF, grouped by ring inside each batch so the inner loop is
-     numpy over all points of one ring).
+  3. candidate join on cell — one of two physical paths, picked from the
+     layer's measured vertex count (``BROADCAST_MAX_VERTS``):
+     **broadcast** (a cell index shipped to every task, zero shuffles)
+     or **partitioned** (a cell-sorted parquet layer range-read per
+     task after one exchange of pages on the coarse cell key, salted
+     by the measured hot-cell factor),
+  4. exact PIP verify with a vectorized crossing-number kernel over the
+     packed edges of every polygon registered in the point's cell.
+
+Both paths share one index builder (``build_cell_index``) and one PIP
+kernel (``_pip_pack``).
 
 Inside-ness for polygons with holes: in some role-0 (outer) ring and in
 no role-1 (hole) ring — matching the reference's hole handling
 (cat=0 rings mark holes, osm/lib/osm_display.ml:593-598).
 
 Scale notes (100 TB design):
-- the polygon side after explode is (features × covering cells) — for
-  OSM-planet-sized layers this still broadcasts per-cell slices well; the
-  cogroup path shuffles pages once on cell id, which is also the layout
-  a tile-partitioned Iceberg table would already have (no extra shuffle).
+- the partitioned layer is bounded by disk, not executor memory; pages
+  shuffle once on the coarse cell key (``z - COARSE_SHIFT``), which is
+  also the layout a tile-partitioned Iceberg table would already have
+  (``pages_clustered=True`` then skips the exchange).  Hot (city)
+  coarse cells are salted by ``suggest_salt`` at that same coarse zoom.
 - the html/binary column is never referenced → column pruning keeps it
   out of every shuffle.
 """
@@ -40,6 +46,7 @@ from pyspark.sql.functions import pandas_udf
 from osm_spark.geo import kernels as K
 
 DEFAULT_CELL_ZOOM = 12
+COARSE_SHIFT = 3          # partitioned path: coarse cells at z - COARSE_SHIFT
 
 
 # ---------------------------------------------------------------------------
@@ -107,42 +114,21 @@ def polygon_cells(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared edge-packed PIP kernel (broadcast AND cogroup paths)
+# shared cell index + edge-packed PIP kernel (both paths)
 
 
-def _pack_polys(polys: list) -> tuple:
-    """Pack [(fid, [(role, lat_arr, lon_arr), ...]), ...] into flat
-    int64 edge arrays so PIP is ONE vectorized crossing-number pass over
-    (all edges) × (all points) — no per-polygon Python in the hot loop:
-    (exi, eyi, exj, eyj, ring_starts, ring_poly, ring_role, fids)."""
-    exi, eyi, exj, eyj = [], [], [], []
-    ring_starts, ring_poly, ring_role, fids = [], [], [], []
-    pos = 0
-    for local, (fid, rings) in enumerate(polys):
-        fids.append(fid)
-        for role, rla, rlo in rings:
-            if len(rla) < 2:
-                # zero-edge ring: no area, and its empty reduceat
-                # segment would corrupt the neighboring ring's count
-                continue
-            ring_starts.append(pos)
-            ring_poly.append(local)
-            ring_role.append(role)
-            exi.append(rlo[:-1]); exj.append(rlo[1:])
-            eyi.append(rla[:-1]); eyj.append(rla[1:])
-            pos += len(rla) - 1
-    if not exi:
-        z64 = np.empty(0, np.int64)
-        return (z64, z64, z64, z64, z64, z64, z64,
-                np.asarray(fids, np.int64))
-    return (
-        np.concatenate(exi), np.concatenate(eyi),
-        np.concatenate(exj), np.concatenate(eyj),
-        np.asarray(ring_starts, np.int64),
-        np.asarray(ring_poly, np.int64),
-        np.asarray(ring_role, np.int64),
-        np.asarray(fids, np.int64),
-    )
+def _flat_cols() -> list:
+    """Flat primitive projection of a polygon layer, one row per feature:
+    ``feature_id``, per-ring ``roles`` and vertex counts ``lens``, and
+    all ring vertices concatenated in ``flat_lat`` / ``flat_lon`` — the
+    input of ``build_cell_index``."""
+    return [
+        "feature_id",
+        F.expr("transform(rings, r -> r.role)").alias("roles"),
+        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
+        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
+        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
+    ]
 
 
 def _pip_pack(pack: tuple, lo: np.ndarray, la: np.ndarray):
@@ -183,228 +169,26 @@ def _pip_pack(pack: tuple, lo: np.ndarray, la: np.ndarray):
             np.concatenate(out_i) if out_i else np.empty(0, np.int64))
 
 
-def _rings_of(rings) -> list:
-    """Normalize a rings payload (Rows from collect(), dicts from Arrow)
-    to [(role, lat_arr, lon_arr), ...]."""
-    return [
-        (int(r["role"]),
-         np.asarray(r["lat"], np.int64),
-         np.asarray(r["lon"], np.int64))
-        for r in rings
-    ]
+def build_cell_index(flat_pdf: pd.DataFrame, z: int) -> dict:
+    """Cell index of a polygon layer in the ``_flat_cols`` projection —
+    the in-memory analog of the R-tree the reference scans per viewport
+    (rtree.ml:173-195): each feature registers in every zoom-``z`` cell
+    its bbox covers, exact PIP runs at query time.
 
-
-# ---------------------------------------------------------------------------
-# broadcast path: cell-indexed PIP in one mapInPandas pass
-
-def build_cell_index(poly_rows, z: int):
-    """Driver-side cell index of a collected polygon layer — the
-    in-memory analog of the R-tree the reference scans per viewport
-    (rtree.ml:173-195): bbox registration per covering cell, exact PIP
-    at query time; per-cell layout from ``_pack_polys``."""
-    per_cell: dict[tuple[int, int], list] = {}
-    for r in poly_rows:
-        fid = int(r["feature_id"])
-        rings = _rings_of(r["rings"])
-        la = np.concatenate([rg[1] for rg in rings])
-        lo = np.concatenate([rg[2] for rg in rings])
-        cx0 = int(K.tile_x(lo.min(), z)); cx1 = int(K.tile_x(lo.max(), z))
-        cy0 = int(K.tile_y_float(la.max(), z)); cy1 = int(K.tile_y_float(la.min(), z))
-        for cx in range(cx0, cx1 + 1):
-            for cy in range(cy0, cy1 + 1):
-                per_cell.setdefault((cx, cy), []).append((fid, rings))
-    return {cell: _pack_polys(polys) for cell, polys in per_cell.items()}
-
-
-def _match_batch(index: dict, la: np.ndarray, lo: np.ndarray, z: int):
-    """Match one point batch against a (cell -> packed polys) index:
-    sort by cell key, one ``_pip_pack`` pass per occupied cell.
-    Returns (point_idx, feature_id) arrays."""
-    cx = K.tile_x(lo, z)
-    cy = K.tile_y_float(la, z)
-    cell_key = (cx << 32) | cy
-    order = np.argsort(cell_key, kind="stable")
-    out_i: list[np.ndarray] = []
-    out_f: list[np.ndarray] = []
-    uniq, starts = np.unique(cell_key[order], return_index=True)
-    bounds = np.append(starts, len(order))
-    for u, s0, s1 in zip(uniq, bounds[:-1], bounds[1:]):
-        cell = index.get((int(u >> 32), int(u & 0xFFFFFFFF)))
-        if cell is None:
-            continue
-        ii_all = order[s0:s1]
-        p_idx, pt_idx = _pip_pack(cell, lo[ii_all], la[ii_all])
-        if len(p_idx):
-            out_i.append(ii_all[pt_idx])
-            out_f.append(cell[7][p_idx])
-    return (np.concatenate(out_i) if out_i else np.empty(0, np.int64),
-            np.concatenate(out_f) if out_f else np.empty(0, np.int64))
-
-
-def _broadcast_join_mapper(bc, z: int, how: str):
-    def fn(batches):
-        index = bc.value
-        for pdf in batches:
-            keys = pdf.iloc[:, 0].to_numpy()
-            la = pdf["lat"].to_numpy(np.int64)
-            lo = pdf["lon"].to_numpy(np.int64)
-            out_k: list[np.ndarray] = []
-            out_f: list[np.ndarray] = []
-            matched = np.zeros(len(keys), dtype=bool)
-            hits, fids = _match_batch(index, la, lo, z)
-            if len(hits):
-                matched[hits] = True
-                out_k.append(keys[hits])
-                out_f.append(fids)
-            n_miss = 0
-            if how == "left":
-                miss = keys[~matched]
-                n_miss = len(miss)
-                out_k.append(miss)
-                out_f.append(np.zeros(n_miss, np.int64))
-            kcat = np.concatenate(out_k) if out_k else np.empty(0, np.int64)
-            fcat = np.concatenate(out_f) if out_f else np.empty(0, np.int64)
-            mask = np.zeros(len(kcat), dtype=bool)
-            if n_miss:
-                mask[len(kcat) - n_miss:] = True  # NULL feature_id for misses
-            yield pd.DataFrame({
-                "k": kcat,
-                "feature_id": pd.arrays.IntegerArray(fcat, mask),
-            })
-
-    return fn
-
-
-# ---------------------------------------------------------------------------
-# top-level joins
-
-
-def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - 3,
-                 max_salt: int = 64,
-                 sample_frac: float | None = None) -> int:
-    """Salt factor from the measured cell histogram (SURVEY.md §7: hot
-    cells are cities by construction; the factor is computed, not
-    guessed): replicate enough that the hottest cell's share lands near
-    the p95 cell.  Measure at the zoom the salt will apply to — the
-    default is the COGROUP zoom (z-3); for the partitioned disk-index
-    path pass ``z=DEFAULT_CELL_ZOOM - COARSE_SHIFT`` (same value by
-    default, kept explicit so the two stay decoupled).  Clamped to
-    [1, max_salt]; AQE skew-join remains the runtime backstop.
-
-    ``sample_frac`` estimates the histogram from a deterministic
-    sample — the max/p95 RATIO is scale-free, so at 10^12 pages a
-    1e-4 sample gives the same factor for a fraction of the scan."""
-    import math
-
-    if sample_frac is not None:
-        pages = pages.sample(fraction=sample_frac, seed=7)
-    counts = with_cell(pages, z).groupBy("cx", "cy").count()
-    row = counts.agg(
-        F.max("count").alias("mx"),
-        F.percentile_approx("count", 0.95).alias("p95"),
-    ).first()
-    if not row or not row.mx or not row.p95:
-        return 1
-    return max(1, min(max_salt, math.ceil(row.mx / max(row.p95, 1))))
-
-
-def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
-    """Collect + cell-index a polygon layer and broadcast it.  Build once
-    per layer version and reuse across joins — at 10^12 pages the build
-    cost amortizes to zero (the reference builds its R-tree once the
-    same way, rtree.ml:90-134)."""
-    spark = polys.sparkSession
-    index = build_cell_index(polys.select("feature_id", "rings").collect(), z)
-    return spark.sparkContext.broadcast(index)
-
-
-# polygon layers up to this many total vertices broadcast (~32 B/edge
-# packed → ≈64 MB index); larger layers take the salted cell-cogroup path
-BROADCAST_MAX_VERTS = 2_000_000
-
-
-# Per-worker cache of built group indexes.  Salt replicas of the same
-# coarse cell carry IDENTICAL polygon sets — whenever two replicas land
-# on the same (reused) Python worker, the second skips the rebuild
-# entirely.  FIFO-bounded; keyed by (cx, cy, z) + feature-id AND
-# geometry checksums (vertex count, wrapped coordinate sums/xors), so
-# a stale entry cannot be served for a different polygon set, a moved
-# geometry, or a different fine zoom.  The checksum costs one vertex
-# concat, reused by the build on a miss.
-_GROUP_INDEX_CACHE: dict = {}
-_GROUP_INDEX_CACHE_MAX = 32
-
-
-def _cogroup_cell_fn(page_key: str, z: int):
-    """Cogrouped (pages-in-coarse-cell, polygons-in-coarse-cell) →
-    exact matches.
-
-    Rings cross the shuffle ONCE per (coarse cell, salt replica) —
-    never per candidate (page, polygon) pair.  Inside each group the
-    SAME machinery as the broadcast path runs: a local fine-zoom cell
-    index over the group's polygons, then one vectorized PIP pass per
-    occupied fine cell.  Cogrouping at a coarser zoom keeps groups few
-    and large (per-group Arrow overhead amortizes over ~10^3-10^4
-    pages instead of ~10^2); the per-worker index cache dedups the
-    build across salt replicas of the same cell."""
-
-    def fn(key: tuple, pts_pdf: pd.DataFrame,
-           polys_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pts_pdf) or not len(polys_pdf):
-            return pd.DataFrame({
-                "k": pd.array([], dtype="int64"),
-                "feature_id": pd.array([], dtype="int64"),
-            })
-        fid_arr = polys_pdf["feature_id"].to_numpy(np.int64)
-        lat_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lat"]]
-        lon_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lon"]]
-        V_lat = (np.concatenate(lat_l) if lat_l
-                 else np.empty(0, np.int64))
-        V_lon = (np.concatenate(lon_l) if lon_l
-                 else np.empty(0, np.int64))
-        with np.errstate(over="ignore"):
-            ck = (int(key[0]), int(key[1]), z, len(fid_arr),
-                  int(fid_arr.sum()), int(np.bitwise_xor.reduce(fid_arr)),
-                  len(V_lat),
-                  int(V_lat.sum(dtype=np.int64)),
-                  int(V_lon.sum(dtype=np.int64)),
-                  int(np.bitwise_xor.reduce(V_lat)) if len(V_lat) else 0,
-                  int(np.bitwise_xor.reduce(V_lon)) if len(V_lon) else 0)
-        index = _GROUP_INDEX_CACHE.get(ck)
-        if index is None:
-            index = _build_group_index_packed(polys_pdf, fid_arr, z,
-                                              lat_l=lat_l, lon_l=lon_l)
-            while len(_GROUP_INDEX_CACHE) >= _GROUP_INDEX_CACHE_MAX:
-                _GROUP_INDEX_CACHE.pop(next(iter(_GROUP_INDEX_CACHE)))
-            _GROUP_INDEX_CACHE[ck] = index
-        lo = pts_pdf["lon"].to_numpy(np.int64)
-        la = pts_pdf["lat"].to_numpy(np.int64)
-        pt_idx, fids = _match_batch(index, la, lo, z)
-        keys = pts_pdf[page_key].to_numpy()
-        return pd.DataFrame({
-            "k": keys[pt_idx],
-            "feature_id": fids,
-        })
-
-    return fn
-
-
-def _build_group_index_packed(polys_pdf: pd.DataFrame,
-                              fid_arr: np.ndarray, z: int,
-                              lat_l: list | None = None,
-                              lon_l: list | None = None) -> dict:
-    """Fine-zoom cell index from the group's flat vertex arrays: one
-    global concat, edge arrays via two boolean masks (drop each ring's
-    last / first vertex), per-feature bboxes via reduceat, per-cell
-    packs via slice-concat — no per-ring Python anywhere."""
+    Each cell maps to one packed tuple of int64 arrays
+    ``(exi, eyi, exj, eyj, ring_starts, ring_poly, ring_role, fids)`` so
+    PIP is ONE crossing-number pass over (cell edges) × (points).  Built
+    with one global vertex concat, edge arrays via two boolean masks
+    (drop each ring's last / first vertex), per-feature bboxes via
+    reduceat and per-cell packs via slice-concat — no per-ring Python."""
+    fid_arr = flat_pdf["feature_id"].to_numpy(np.int64)
     nf = len(fid_arr)
-    if lat_l is None:
-        lat_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lat"]]
-        lon_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lon"]]
-    else:
-        lat_l, lon_l = list(lat_l), list(lon_l)
-    lens_l = [np.asarray(v, np.int64) for v in polys_pdf["lens"]]
-    roles_l = [np.asarray(v, np.int64) for v in polys_pdf["roles"]]
+    if not nf:
+        return {}
+    lat_l = [np.asarray(v, np.int64) for v in flat_pdf["flat_lat"]]
+    lon_l = [np.asarray(v, np.int64) for v in flat_pdf["flat_lon"]]
+    lens_l = [np.asarray(v, np.int64) for v in flat_pdf["lens"]]
+    roles_l = [np.asarray(v, np.int64) for v in flat_pdf["roles"]]
     # drop zero-edge rings (0- or 1-vertex): they carry no area, and
     # their empty reduceat segments would crash on (or steal crossing
     # counts from) neighboring rings.  Rare, so repack only when hit.
@@ -473,19 +257,118 @@ def _build_group_index_packed(polys_pdf: pd.DataFrame,
     return index
 
 
+def _match_batch(index: dict, la: np.ndarray, lo: np.ndarray, z: int):
+    """Match one point batch against a (cell -> packed polys) index:
+    sort by cell key, one ``_pip_pack`` pass per occupied cell.
+    Returns (point_idx, feature_id) arrays."""
+    cx = K.tile_x(lo, z)
+    cy = K.tile_y_float(la, z)
+    cell_key = (cx << 32) | cy
+    order = np.argsort(cell_key, kind="stable")
+    out_i: list[np.ndarray] = []
+    out_f: list[np.ndarray] = []
+    uniq, starts = np.unique(cell_key[order], return_index=True)
+    bounds = np.append(starts, len(order))
+    for u, s0, s1 in zip(uniq, bounds[:-1], bounds[1:]):
+        cell = index.get((int(u >> 32), int(u & 0xFFFFFFFF)))
+        if cell is None:
+            continue
+        ii_all = order[s0:s1]
+        p_idx, pt_idx = _pip_pack(cell, lo[ii_all], la[ii_all])
+        if len(p_idx):
+            out_i.append(ii_all[pt_idx])
+            out_f.append(cell[7][p_idx])
+    return (np.concatenate(out_i) if out_i else np.empty(0, np.int64),
+            np.concatenate(out_f) if out_f else np.empty(0, np.int64))
+
+
+def _emit(keys: np.ndarray, hits: np.ndarray, fids: np.ndarray,
+          how: str) -> pd.DataFrame:
+    """One output batch of (k, feature_id): the matched pairs, then for
+    ``how='left'`` every unmatched key with a NULL feature_id
+    (outer-default semantics, database/join.ml:35-57)."""
+    if how == "left":
+        matched = np.zeros(len(keys), dtype=bool)
+        matched[hits] = True
+        miss = keys[~matched]
+        k = np.concatenate([keys[hits], miss])
+        f = np.concatenate([fids, np.zeros(len(miss), np.int64)])
+    else:
+        k, f = keys[hits], fids
+    mask = np.arange(len(k)) >= len(hits)      # NULL feature_id for misses
+    return pd.DataFrame({"k": k, "feature_id": pd.arrays.IntegerArray(f, mask)})
+
+
+def _broadcast_join_mapper(bc, z: int, how: str):
+    def fn(batches):
+        index = bc.value
+        for pdf in batches:
+            hits, fids = _match_batch(index, pdf["lat"].to_numpy(np.int64),
+                                      pdf["lon"].to_numpy(np.int64), z)
+            yield _emit(pdf.iloc[:, 0].to_numpy(), hits, fids, how)
+
+    return fn
+
+
+# ---------------------------------------------------------------------------
+# top-level joins
+
+
+def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT,
+                 max_salt: int = 64,
+                 sample_frac: float | None = None) -> int:
+    """Salt factor from the measured cell histogram (SURVEY.md §7: hot
+    cells are cities by construction; the factor is computed, not
+    guessed): replicate enough that the hottest cell's share lands near
+    the p95 cell.  Measure at the zoom the salt will apply to — the
+    partitioned path's coarse zoom (``zc`` in the layer's sidecar,
+    ``DEFAULT_CELL_ZOOM - COARSE_SHIFT`` by default).  Clamped to
+    [1, max_salt]; AQE skew-join remains the runtime backstop.
+
+    ``sample_frac`` estimates the histogram from a deterministic
+    sample — the max/p95 RATIO is scale-free, so at 10^12 pages a
+    1e-4 sample gives the same factor for a fraction of the scan."""
+    import math
+
+    if sample_frac is not None:
+        pages = pages.sample(fraction=sample_frac, seed=7)
+    counts = with_cell(pages, z).groupBy("cx", "cy").count()
+    row = counts.agg(
+        F.max("count").alias("mx"),
+        F.percentile_approx("count", 0.95).alias("p95"),
+    ).first()
+    if not row or not row.mx or not row.p95:
+        return 1
+    return max(1, min(max_salt, math.ceil(row.mx / max(row.p95, 1))))
+
+
+def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
+    """Collect (Arrow) + cell-index a polygon layer and broadcast it.
+    Build once per layer version and reuse across joins — at 10^12 pages
+    the build cost amortizes to zero (the reference builds its R-tree
+    once the same way, rtree.ml:90-134)."""
+    spark = polys.sparkSession
+    index = build_cell_index(polys.select(*_flat_cols()).toPandas(), z)
+    return spark.sparkContext.broadcast(index)
+
+
+# polygon layers up to this many total vertices broadcast (~32 B/edge
+# packed → ≈64 MB index); larger layers take the partitioned path
+BROADCAST_MAX_VERTS = 2_000_000
+
+
 # ---------------------------------------------------------------------------
 # partitioned disk-index path: the Spark analog of the reference's
 # ON-DISK R-tree (database/rtree.ml memory-maps the tree and range-reads
 # leaf pages per query).  The polygon layer is written cell-sorted in
-# parquet; pages range-partition on the cell key (a pure JVM columnar
-# exchange — no pandas cogroup machinery); every worker then range-reads
-# ONLY its partition's cell span from the layer file with row-group
-# statistics pruning.  No polygon replication, no grouped-map sort of
+# parquet; pages hash-partition on the coarse cell key (a pure JVM
+# columnar exchange); every worker then range-reads ONLY its
+# partition's cell span from the layer file with row-group statistics
+# pruning.  No polygon replication, no grouped-map sort of
 # the pages side, layer size bounded by disk not executor memory.
 
 
 CKEY_SCALE = 1 << 32
-COARSE_SHIFT = 3          # coarse partition cells at z - COARSE_SHIFT
 
 
 def _gkey_col(shift: int = COARSE_SHIFT):
@@ -530,11 +413,7 @@ def write_partitioned_layer(polys: DataFrame, path: str,
     zc = max(z - COARSE_SHIFT, 2)
     cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
         (F.col("cx").cast("long") * CKEY_SCALE + F.col("cy")).alias("gkey"),
-        "feature_id",
-        F.expr("transform(rings, r -> r.role)").alias("roles"),
-        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
-        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
-        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
+        *_flat_cols(),
     )
     (cells.repartitionByRange(n_files, "gkey")
      .sortWithinPartitions("gkey")
@@ -558,10 +437,7 @@ PJOIN_BATCH_BYTES = 64 << 20
 
 def _partitioned_join_mapper(layer_path: str, z: int, how: str,
                              page_key: str):
-    import os
-
-    budget = int(os.environ.get(
-        "OSM_SPARK_PJOIN_BATCH_BYTES", PJOIN_BATCH_BYTES))
+    budget = PJOIN_BATCH_BYTES      # read on the driver, shipped in the closure
 
     def fn(batches):
         import pyarrow.dataset as pads
@@ -577,7 +453,7 @@ def _partitioned_join_mapper(layer_path: str, z: int, how: str,
         seen_gk: set[int] = set()
         have_fid: set[int] = set()
         layer_parts: list[pd.DataFrame] = []
-        index = None
+        index: dict | None = {}        # None: layer_parts grew, rebuild
 
         def ensure_index(gk: np.ndarray):
             nonlocal index
@@ -598,44 +474,18 @@ def _partitioned_join_mapper(layer_path: str, z: int, how: str,
                             int(v) for v in lp["feature_id"].to_numpy())
                         layer_parts.append(lp)
                         index = None
-            if index is None and layer_parts:
-                lpdf = (layer_parts[0] if len(layer_parts) == 1
-                        else pd.concat(layer_parts, ignore_index=True))
-                fid_arr = lpdf["feature_id"].to_numpy(np.int64)
-                index = _build_group_index_packed(lpdf, fid_arr, z)
+            if index is None:
+                index = build_cell_index(
+                    layer_parts[0] if len(layer_parts) == 1
+                    else pd.concat(layer_parts, ignore_index=True), z)
             return index
 
         def flush(group: list[pd.DataFrame]) -> pd.DataFrame:
             pdf = group[0] if len(group) == 1 else pd.concat(group)
-            keys = pdf[page_key].to_numpy()
-            la = pdf["lat"].to_numpy(np.int64)
-            lo = pdf["lon"].to_numpy(np.int64)
-            gk = pdf["gkey"].to_numpy(np.int64)
-            out_k: list[np.ndarray] = []
-            out_f: list[np.ndarray] = []
-            matched = np.zeros(len(keys), dtype=bool)
-            idx = ensure_index(gk) if len(gk) else None
-            if idx is not None:
-                hits, fids = _match_batch(idx, la, lo, z)
-                if len(hits):
-                    matched[hits] = True
-                    out_k.append(keys[hits])
-                    out_f.append(fids)
-            n_miss = 0
-            if how == "left":
-                miss = keys[~matched]
-                n_miss = len(miss)
-                out_k.append(miss)
-                out_f.append(np.zeros(n_miss, np.int64))
-            kcat = np.concatenate(out_k) if out_k else np.empty(0, np.int64)
-            fcat = np.concatenate(out_f) if out_f else np.empty(0, np.int64)
-            mask = np.zeros(len(kcat), dtype=bool)
-            if n_miss:
-                mask[len(kcat) - n_miss:] = True
-            return pd.DataFrame({
-                "k": kcat,
-                "feature_id": pd.arrays.IntegerArray(fcat, mask),
-            })
+            idx = ensure_index(pdf["gkey"].to_numpy(np.int64))
+            hits, fids = _match_batch(idx, pdf["lat"].to_numpy(np.int64),
+                                      pdf["lon"].to_numpy(np.int64), z)
+            return _emit(pdf[page_key].to_numpy(), hits, fids, how)
 
         group: list[pd.DataFrame] = []
         gbytes = 0
@@ -668,11 +518,11 @@ def spatial_join_partitioned(
 ) -> DataFrame:
     """PIP-join against a ``write_partitioned_layer`` output: pages
     hash-partition on the coarse cell key (one JVM columnar exchange,
-    no range-sampling job, no pandas cogroup), each worker reads ONLY
-    its partition's coarse cells from the layer parquet (row-group
-    pruning on the sorted gkey) and runs the shared vectorized index +
-    PIP kernels.  The layer never shuffles and is bounded by disk, not
-    executor memory.  ``salt`` spreads a hot coarse cell's pages across
+    no range-sampling job), each worker reads ONLY its partition's
+    coarse cells from the layer parquet (row-group pruning on the
+    sorted gkey) and runs the shared vectorized index + PIP kernels.
+    The layer never shuffles and is bounded by disk, not executor
+    memory.  ``salt`` spreads a hot coarse cell's pages across
     partitions — the price is duplicate layer READS, never duplicate
     shuffle bytes.  ``pages_clustered=True`` declares the pages table
     spatially clustered in storage (``cluster.cluster_by_hilbert``
@@ -711,112 +561,62 @@ def spatial_join_partitioned(
     ).withColumnRenamed("k", page_key)
 
 
+def _managed_layer_dir() -> str:
+    """Fresh temp dir for a layer ``spatial_join`` writes itself: under
+    the first ``$SPARK_LOCAL_DIRS`` entry when set, removed at
+    interpreter exit."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    root = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0] or None
+    if root:
+        os.makedirs(root, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="osm_layer_", dir=root)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def spatial_join(
     pages: DataFrame,
     polys: DataFrame,
     z: int = DEFAULT_CELL_ZOOM,
     how: str = "inner",
-    broadcast_polys: bool | None = None,
-    salt: int | None = None,
     page_key: str = "page_id",
     index=None,
-    broadcast_max_verts: int = BROADCAST_MAX_VERTS,
-    cogroup_zoom: int | None = None,
-    layer_path: str | None = None,
-    pages_clustered: bool = False,
 ) -> DataFrame:
     """PIP-join pages (with lat/lon columns) to a polygon layer.
 
     Returns (page_key, feature_id); ``how='left'`` keeps unmatched pages
     with NULL feature_id (outer-default semantics, database/join.ml:35-57).
 
-    Strategy (``broadcast_polys=None`` auto-picks from the measured
-    layer size — one cheap aggregate over the polygon side only):
+    The path follows the layer's measured vertex count (one cheap
+    aggregate over the polygon side only):
 
-    - **broadcast**: ships a (cell → packed polygon) index to every
-      executor once and PIP-tags pages in a single mapInPandas pass —
-      zero shuffles, zero joins.  Right whenever the packed layer fits
-      comfortably in executor memory (``broadcast_max_verts``).
-    - **partitioned disk-index** (when ``layer_path`` — a
-      ``write_partitioned_layer`` output — is given): pages
-      hash-partition on the coarse cell key and each task range-reads
-      only its cells from the layer parquet; with
-      ``pages_clustered=True`` the exchange is skipped entirely.  The
-      preferred path for layers above the broadcast limit.
-    - **salted cell-cogroup**: the fallback when no materialized layer
-      exists — pages shuffle once on (cell, salt); polygon cells
-      replicate ``salt`` ways; rings ship once per (cell, salt) group,
-      never per candidate pair.  ``salt`` spreads hot (city) cells; AQE
-      skew-join remains the runtime backstop.  Use
-      ``suggest_salt(pages)`` to derive the factor from the measured
-      cell histogram.
+    - **broadcast** (``index`` given — a ``broadcast_polygon_index`` —
+      or at most ``BROADCAST_MAX_VERTS`` vertices): ships a
+      (cell → packed polygon) index to every executor once and PIP-tags
+      pages in a single mapInPandas pass — zero shuffles, zero joins.
+    - **partitioned** (larger layers): writes the layer with
+      ``write_partitioned_layer`` into a temp dir and joins with
+      ``spatial_join_partitioned``, salted by ``suggest_salt`` at the
+      layer's coarse zoom.  To reuse one layer across joins, write it
+      once and call ``spatial_join_partitioned`` directly.
     """
-    if broadcast_polys is None and index is not None:
-        broadcast_polys = True      # caller already built the index
-    if broadcast_polys is None:
+    if index is None:
         nv = polys.select(
             F.expr("aggregate(transform(rings, r -> size(r.lat)),"
                    " 0L, (a, x) -> a + x)").alias("nv")
         ).agg(F.sum("nv").alias("v")).first()
-        broadcast_polys = int(nv.v or 0) <= broadcast_max_verts
-
-    if not broadcast_polys and layer_path is not None:
-        return spatial_join_partitioned(
-            pages, layer_path, z=z, how=how, page_key=page_key,
-            salt=salt or 1, pages_clustered=pages_clustered)
-
-    if broadcast_polys:
-        bc = index if index is not None else broadcast_polygon_index(polys, z)
-        out = pages.select(page_key, "lat", "lon").mapInPandas(
-            _broadcast_join_mapper(bc, z, how),
-            "k long, feature_id long",
-        ).withColumnRenamed("k", page_key)
-        return out
-
-    # shuffle at a coarser zoom than the PIP cells: fewer, larger
-    # cogroup groups (per-group Arrow overhead amortizes), and fewer
-    # polygon replicas; each group builds the fine-zoom index locally
-    # from the flat vertex arrays (vectorized, cached across salt
-    # replicas on the same worker).  z-3 measured best at 2M×20k
-    # (z-4 groups get big enough that the group index rebuild and the
-    # polygon replica decode dominate; finer than z-2 fragments groups)
-    zc = max(z - 3, 2) if cogroup_zoom is None else cogroup_zoom
-    pts = with_cell(pages.select(page_key, "lat", "lon"), zc)
-    # flat primitive vertex columns (minimum shuffle bytes — edge arrays
-    # are derived group-side with vectorized masks, never per-ring
-    # Python).  Primitive int64 lists only: nested array<struct<array>>
-    # payloads segfault pyspark's cogroup Arrow->pandas conversion.
-    cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
-        "cx", "cy", "feature_id",
-        F.expr("transform(rings, r -> r.role)").alias("roles"),
-        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
-        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
-        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
-    )
-
-    keys = ["cx", "cy"]
-    if salt and salt > 1:
-        keys = ["cx", "cy", "salt"]
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(page_key), F.lit(salt)))
-        cells = cells.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        ).withColumn("salt", F.col("salt").cast("long"))
-
-    matches = (
-        pts.groupBy(*keys)
-        .cogroup(cells.groupBy(*keys))
-        .applyInPandas(_cogroup_cell_fn(page_key, z), "k long, feature_id long")
-        .withColumnRenamed("k", page_key)
-    )
-
-    if how == "left":
-        return pages.select(page_key).join(matches, page_key, "left")
-    return matches
-
-
-def spatial_join_pages(pages_with_geo: DataFrame, polys: DataFrame, **kw) -> DataFrame:
-    """Convenience: join and keep url + feature info."""
-    m = spatial_join(pages_with_geo, polys, **kw)
-    return pages_with_geo.join(m, kw.get("page_key", "page_id"), "left").select(
-        "url", "feature_id"
-    )
+        if int(nv.v or 0) > BROADCAST_MAX_VERTS:
+            layer = write_partitioned_layer(polys, _managed_layer_dir(), z=z)
+            zc = _read_layer_meta(layer)["zc"]
+            return spatial_join_partitioned(
+                pages, layer, z=z, how=how, page_key=page_key,
+                salt=suggest_salt(pages, z=zc))
+        index = broadcast_polygon_index(polys, z)
+    return pages.select(page_key, "lat", "lon").mapInPandas(
+        _broadcast_join_mapper(index, z, how),
+        "k long, feature_id long",
+    ).withColumnRenamed("k", page_key)

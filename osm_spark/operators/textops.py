@@ -117,10 +117,6 @@ def fingerprint_udf():
     return fp
 
 
-def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("pred_lang", langid_col(F.col(text_col)))
-
-
 _TAG_RE = None
 
 

@@ -47,21 +47,24 @@ def fixture_data(spark):
     return geo, polys, oracle
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {"broadcast_polys": True},
-        {"broadcast_polys": False},
-        {"broadcast_polys": False, "salt": 4},
-    ],
-    ids=["broadcast", "shuffle", "salted"],
-)
-def test_spatial_join_matches_bruteforce(spark, fixture_data, kw):
+@pytest.mark.parametrize("path", ["broadcast", "shuffle", "salted"])
+def test_spatial_join_matches_bruteforce(spark, fixture_data, path,
+                                         monkeypatch, tmp_path):
+    """broadcast: the auto-picked path for a small layer; shuffle: the
+    auto-picked partitioned path (managed layer dir, measured salt) once
+    the layer exceeds the broadcast limit; salted: an explicit salt over
+    a prebuilt partitioned layer."""
+    from osm_spark.operators import spatial_join as SJ
+
     geo, polys, oracle = fixture_data
-    got = {
-        (r.page_id, r.feature_id)
-        for r in spatial_join(geo, polys, **kw).collect()
-    }
+    if path == "shuffle":
+        monkeypatch.setattr(SJ, "BROADCAST_MAX_VERTS", 0)
+    if path == "salted":
+        layer = SJ.write_partitioned_layer(polys, str(tmp_path / "layer"))
+        out = SJ.spatial_join_partitioned(geo, layer, salt=4)
+    else:
+        out = spatial_join(geo, polys)
+    got = {(r.page_id, r.feature_id) for r in out.collect()}
     assert got == oracle
     assert len(got) > N_PAGES * 0.4  # skewed fixture: most pages hit a city
 
@@ -89,26 +92,6 @@ def test_text_passthrough_byte_identical(spark):
     joined = geo.join(spatial_join(geo, polys, how="left"), "page_id", "left")
     after = {r.url: hashlib.sha256(r.text.encode()).hexdigest() for r in joined.select("url", "text").collect()}
     assert after == before
-
-
-def test_broadcast_and_cogroup_paths_agree(spark):
-    """The zero-shuffle broadcast index path and the salted cell-cogroup
-    path are alternative physical plans of the SAME logical join — their
-    match sets must be identical."""
-    from osm_spark import fixtures as FX
-    from osm_spark.operators.geocode import geocode_ids
-    from osm_spark.operators.spatial_join import spatial_join
-
-    docs = geocode_ids(
-        spark.range(1500).withColumnRenamed("id", "doc_id"), "doc_id")
-    polys = FX.polygons_df(spark, 200)
-    a = {(r.doc_id, r.feature_id) for r in
-         spatial_join(docs, polys, page_key="doc_id").collect()}
-    b = {(r.doc_id, r.feature_id) for r in
-         spatial_join(docs, polys, page_key="doc_id",
-                      broadcast_polys=False, salt=4).collect()}
-    assert a == b
-    assert len(a) > 50
 
 
 def test_partitioned_disk_index_path_agrees(spark, tmp_path):
@@ -164,7 +147,7 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
          SJ.spatial_join_partitioned(docs, layer, page_key="doc_id",
                                      how="left").collect()}
 
-    monkeypatch.setenv("OSM_SPARK_PJOIN_BATCH_BYTES", "1")
+    monkeypatch.setattr(SJ, "PJOIN_BATCH_BYTES", 1)
     b = {(r.doc_id, r.feature_id) for r in
          SJ.spatial_join_partitioned(docs, layer, page_key="doc_id",
                                      how="left").collect()}
@@ -200,11 +183,14 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
     assert total == len(a)
 
 
-def test_many_ring_multipolygon_both_paths(spark):
+def test_many_ring_multipolygon_both_paths(spark, tmp_path):
     """A feature with >16 rings (1 outer + 20 holes) next to a second
-    feature: exercises ring identity in the cogroup path (round-1 bug:
+    feature: exercises ring identity across features (round-1 bug:
     ring_key = feature_id*16 + ring_idx collided across features).  Both
     physical paths must produce the hand-computed match set."""
+    from osm_spark.operators.spatial_join import (spatial_join_partitioned,
+                                                  write_partitioned_layer)
+
     base_lat, base_lon = FX.LAT0 + 1_000_000, FX.LON0 + 1_000_000
     S = 100_000
 
@@ -238,9 +224,10 @@ def test_many_ring_multipolygon_both_paths(spark):
     exp.add((pid, 8))
     pts_df = spark.createDataFrame(pts, "doc_id long, lat long, lon long")
     got_b = {(r.doc_id, r.feature_id) for r in spatial_join(
-        pts_df, polys, page_key="doc_id", broadcast_polys=True).collect()}
-    got_c = {(r.doc_id, r.feature_id) for r in spatial_join(
-        pts_df, polys, page_key="doc_id", broadcast_polys=False, salt=3).collect()}
+        pts_df, polys, page_key="doc_id").collect()}
+    layer = write_partitioned_layer(polys, str(tmp_path / "layer"))
+    got_c = {(r.doc_id, r.feature_id) for r in spatial_join_partitioned(
+        pts_df, layer, page_key="doc_id", salt=3).collect()}
     assert got_b == exp
     assert got_c == exp
 
@@ -285,64 +272,35 @@ def test_suggest_salt_sampled_matches_full(spark):
 
 def test_degenerate_rings_skipped(spark):
     """0- and 1-vertex rings carry no area and must not corrupt (or
-    crash) the packed reduceat segments on either PIP path."""
+    crash) the packed reduceat segments of the cell index — wherever
+    the degenerate ring sits in the feature's ring list."""
     import pandas as pd
 
-    from osm_spark.operators.spatial_join import (
-        _build_group_index_packed, _match_batch, _pack_polys, _pip_pack)
+    from osm_spark.operators.spatial_join import build_cell_index, _match_batch
 
     sq_la = np.array([0, 0, 10**6, 10**6, 0], np.int64)
     sq_lo = np.array([0, 10**6, 10**6, 0, 0], np.int64)
     pt = np.array([5 * 10**5], np.int64)
-    # broadcast path: degenerate ring LAST (the crash case) and first
+    empty = np.empty(0, np.int64)
+
+    def flat(rings):
+        return {"flat_lat": np.concatenate([r[1] for r in rings]),
+                "flat_lon": np.concatenate([r[2] for r in rings]),
+                "lens": np.array([len(r[1]) for r in rings], np.int64),
+                "roles": np.array([r[0] for r in rings], np.int64)}
+
+    # feature 7: degenerate ring LAST (the crash case), first, or empty;
+    # feature 9: all-degenerate — registers no cell, never matches
     for rings in ([(0, sq_la, sq_lo), (1, pt, pt)],
                   [(1, pt, pt), (0, sq_la, sq_lo)],
-                  [(0, sq_la, sq_lo), (1, np.empty(0, np.int64),
-                                       np.empty(0, np.int64))]):
-        pack = _pack_polys([(7, rings)])
-        p_idx, pt_idx = _pip_pack(pack, pt, pt)
-        assert list(pack[7][p_idx]) == [7]  # inside; hole ignored
-    # all-degenerate feature: empty pack, no matches, no crash
-    pack = _pack_polys([(9, [(0, pt, pt)])])
-    assert len(_pip_pack(pack, pt, pt)[0]) == 0
-
-    # cogroup/partitioned path: same geometry through the flat builder
-    pdf = pd.DataFrame({
-        "feature_id": [7, 9],
-        "flat_lat": [np.concatenate([sq_la, pt]), pt],
-        "flat_lon": [np.concatenate([sq_lo, pt]), pt],
-        "lens": [np.array([5, 1], np.int64), np.array([1], np.int64)],
-        "roles": [np.array([0, 1], np.int64), np.array([0], np.int64)],
-    })
-    idx = _build_group_index_packed(pdf, np.array([7, 9], np.int64), 12)
-    hits, fids = _match_batch(idx, pt, pt, 12)
-    assert list(fids) == [7]
-
-
-def test_group_index_cache_keys_on_geometry_and_zoom(spark):
-    """A reused worker must NOT serve a cached index for the same
-    feature ids with moved rings or a different fine zoom."""
-    import pandas as pd
-
-    from osm_spark.operators.spatial_join import _cogroup_cell_fn
-
-    def polys_pdf(shift):
-        la = np.array([0, 0, 10**6, 10**6, 0], np.int64) + shift
-        lo = np.array([0, 10**6, 10**6, 0, 0], np.int64) + shift
-        return pd.DataFrame({
-            "feature_id": [7],
-            "flat_lat": [la], "flat_lon": [lo],
-            "lens": [np.array([5], np.int64)],
-            "roles": [np.array([0], np.int64)],
-        })
-
-    pts = pd.DataFrame({"page_id": [1],
-                        "lat": [5 * 10**5], "lon": [5 * 10**5]})
-    fn = _cogroup_cell_fn("page_id", 12)
-    key = (2048, 2048)
-    assert len(fn(key, pts, polys_pdf(0))) == 1           # inside
-    # same fids, same cell, geometry moved away: must MISS the cache
-    assert len(fn(key, pts, polys_pdf(4 * 10**6))) == 0
+                  [(0, sq_la, sq_lo), (1, empty, empty)]):
+        pdf = pd.DataFrame([{"feature_id": 7, **flat(rings)},
+                            {"feature_id": 9, **flat([(0, pt, pt)])}])
+        idx = build_cell_index(pdf, 12)
+        hits, fids = _match_batch(idx, pt, pt, 12)
+        assert list(fids) == [7], rings  # inside; hole ignored
+    all_degenerate = pd.DataFrame([{"feature_id": 9, **flat([(0, pt, pt)])}])
+    assert build_cell_index(all_degenerate, 12) == {}
 
 
 def test_partitioned_layer_z_mismatch_raises(spark, tmp_path):

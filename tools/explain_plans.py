@@ -75,29 +75,6 @@ def main():
         "side cheap: cost = one scan + vectorized PIP.\n\n"
         f"```\n{plan.strip()}\n```\n")
 
-    # 3. spatial join, cogroup path with salting: shuffle on (cx, cy, salt)
-    sj2 = spatial_join(geo, FX.polygons_df(spark, 50), how="inner",
-                       page_key="doc_id", broadcast_polys=False, salt=4)
-    section(
-        "Spatial join — salted cell-cogroup path (huge layers)",
-        sj2,
-        "For polygon layers too big to broadcast (auto-switch: "
-        "`broadcast_polys=None` measures the layer's vertex count and "
-        "broadcasts below ~2M vertices): pages shuffle ONCE on a coarse "
-        "(cell, salt) key — few large cogroup groups, so per-group Arrow "
-        "overhead amortizes — polygon rings ship once per (cell, salt) "
-        "as flat primitive arrays, never per candidate pair; each group "
-        "rebuilds the fine-zoom packed index and runs the same "
-        "vectorized matcher as the broadcast path.  Hot city cells "
-        "split across `salt` reducers, AQE skew-join as backstop.  "
-        "Measured (tools/pathbench.py, 2M pages x 20k polys, local[8]): "
-        "~1.9x of the broadcast path with an identical match set; its "
-        "floor is the grouped-map machinery itself (BENCH/ANALYSIS.md), "
-        "which is why the partitioned disk-index path below is the "
-        "preferred non-broadcast strategy.",
-        must_contain=("Exchange",),
-    )
-
     # 2c. partitioned disk-index path: hash exchange variant + the
     # zero-shuffle clustered variant
     from osm_spark.operators.spatial_join import (spatial_join_partitioned,

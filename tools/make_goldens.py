@@ -7,7 +7,7 @@ so their outputs are scale-factor-independent constants; the driver's
 DuckDB oracle can therefore be a literal VALUES table.  This script
 
 1. runs each query once and records (columns, dtypes, rows) to
-   ``data/goldens/<name>.json``;
+   ``tests/goldens/<name>.json`` (tracked, so a fresh clone has them);
 2. cross-checks each result against an INDEPENDENT scalar
    re-computation / invariant suite (recursive-definition DP, pure-dict
    Dijkstra distance preservation for CH, ring-closure + orientation for
@@ -29,7 +29,7 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-GOLDEN_DIR = Path(__file__).resolve().parent.parent / "data" / "goldens"
+GOLDEN_DIR = Path(__file__).resolve().parent.parent / "tests" / "goldens"
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,13 @@
-"""Skew evidence: salted vs unsalted cell-cogroup spatial join on the
+"""Skew evidence: salted vs unsalted partitioned spatial join
+(``spatial_join_partitioned`` over one prebuilt layer) on the
 deliberately hot fixture (70% of pages inside 5 city cells), with REAL
 per-task time histograms from the Spark event log.
 
 What it proves (round-4 verdict item 9):
 - ``suggest_salt`` derives the factor from the measured cell histogram
-  (max/p95 share), recorded here with its inputs — computed, not
-  guessed;
-- with salt=1 the cogroup stage is dominated by straggler tasks holding
+  (max/p95 share) at the layer's coarse zoom, recorded here with its
+  inputs — computed, not guessed;
+- with salt=1 the join stage is dominated by straggler tasks holding
   the hot city cells (max/median task time ratio >> 1);
 - with the suggested salt the same stage's task-time distribution
   flattens and the stage finishes faster.
@@ -93,9 +94,10 @@ def main():
 
     from osm_spark import fixtures as FX
     from osm_spark.operators.geocode import geocode_pages
-    from osm_spark.operators.spatial_join import (DEFAULT_CELL_ZOOM,
-                                                 spatial_join, suggest_salt,
-                                                 with_cell)
+    from osm_spark.operators.spatial_join import (_read_layer_meta,
+                                                 spatial_join_partitioned,
+                                                 suggest_salt, with_cell,
+                                                 write_partitioned_layer)
     from osm_spark.session import get_spark
 
     event_dir = Path(tempfile.mkdtemp(prefix="skewbench_events_"))
@@ -133,26 +135,28 @@ def main():
             F.when(hot, F.lit(c0lon - r0) + jo).otherwise(
                 F.col("lon")).alias("lon"))
 
+    # one-time layer build (untimed); the salt applies at its coarse zoom
+    layer = str(base / f"layer_{args.polys}_z12")
+    write_partitioned_layer(polys, layer)
+    zc = _read_layer_meta(layer)["zc"]
+
     # salt derivation, with its inputs on record
-    zc = DEFAULT_CELL_ZOOM - 3
     hist_row = with_cell(geo, zc).groupBy("cx", "cy").count().agg(
         F.max("count").alias("mx"),
         F.percentile_approx("count", 0.95).alias("p95")).first()
-    salt = suggest_salt(geo)
+    salt = suggest_salt(geo, z=zc)
     derivation = {"cell_zoom": zc, "max_cell_pages": int(hist_row.mx),
                   "p95_cell_pages": int(hist_row.p95),
                   "ratio": round(hist_row.mx / hist_row.p95, 2),
                   "suggested_salt": salt}
 
-    spatial_join(geo.limit(2000), polys, broadcast_polys=False,
-                 salt=1).count()                       # warm-up
+    spatial_join_partitioned(geo.limit(2000), layer).count()   # warm-up
     runs = {}
     for name, s in (("unsalted", 1), ("salted", salt)):
         best = None
         for _ in range(args.reps):
             t0 = time.time()
-            n = spatial_join(geo, polys, broadcast_polys=False,
-                             salt=s).count()
+            n = spatial_join_partitioned(geo, layer, salt=s).count()
             el = time.time() - t0
             if best is None or el < best["wall_sec"]:
                 best = {"salt": s, "wall_sec": round(el, 3), "rows": n,
