@@ -17,11 +17,14 @@ feature (those are ≥ R cells away).  Points that fail that bound — or
 found no candidate at all — retry through expanding rings (radius
 doubles each round, reference rtree.ml best-first analog): the
 still-uncertified POINTS explode into the wider ring and equi-join
-features keyed at their own cell, so the feature side never re-explodes
-and never broadcasts.  Only a guarded-small final residue takes a brute
-pass, and that pass broadcasts the RESIDUE POINTS (never the feature
-layer) and streams features through mapInPandas with per-batch partial
-top-k — there is no full-layer broadcast on any path.  At production
+features keyed at their own cell, so the feature side never re-explodes.
+Only a guarded-small final residue takes a brute pass, and that pass
+broadcasts the RESIDUE POINTS and streams features through mapInPandas
+with per-batch partial top-k, so the brute fallback never broadcasts
+the feature layer.  What does broadcast: round 1 ships the
+radius-registered feature cells, (2R+1)² rows per feature, and a layer
+of at most ``BROADCAST_FEATURE_LIMIT`` features skips the cells
+entirely and ships whole to the broadcast-brute kernel.  At production
 scale the fallback fraction is tuned to ~0 by picking
 ``cell_zoom``/``radius`` from the feature density histogram.
 """
@@ -70,6 +73,8 @@ def cell_min_extent(cell_zoom: int, lat_min_fp: int, lat_max_fp: int,
     return min(h, w)
 
 
+# feature layers up to this many rows are collected and ship whole to
+# the broadcast-brute kernel; larger layers take the cell-ring path
 BROADCAST_FEATURE_LIMIT = 200_000
 MAX_EXPANSIONS = 3          # ring-doubling retry rounds before the residue pass
 BRUTE_RESIDUE_LIMIT = 10_000  # max uncertified points the brute pass accepts
@@ -103,64 +108,60 @@ def _topk_block(d2: np.ndarray, f_id: np.ndarray, kk: int):
     return part, pd2
 
 
-def knn_broadcast(points: DataFrame, features: DataFrame, k: int = 1,
-                  key: str = "page_id", chunk: int = 0) -> DataFrame:
-    """Exact kNN in one mapInPandas pass: the feature array ships to each
+def _block_topk(q_la, q_lo, f_id, f_la, f_lo, k: int):
+    """Exact top-k of each query point over the feature arrays, in query
+    blocks of ~2 MB of int64 distances (the kernel is DRAM-bound, so
+    small blocks stay cache-resident, and |queries| × |features| can
+    reach 800 MB unblocked).  Yields (s, e, part, pd2) per block of
+    queries [s, e): see _topk_block.  dist² is the planar fixed-point
+    metric with dlon wrapped to <=180° (the int64 overflow guard too)."""
+    if not len(q_la) or not len(f_id):
+        return
+    kk = min(k, len(f_id))
+    step = max(256, (2 << 20) // (8 * len(f_id)))
+    # the wrap is only possible when some point-feature lon span can
+    # exceed 180°; skipping it otherwise saves a pass per block
+    wrap = (max(int(q_lo.max()), int(f_lo.max()))
+            - min(int(q_lo.min()), int(f_lo.min())) > K.LON_WORLD // 2)
+    for s in range(0, len(q_la), step):
+        e = min(s + step, len(q_la))
+        # allocation-lean: 2 int64 blocks (+1 bool when wrapping)
+        d2 = q_la[s:e, None] - f_la[None, :]
+        d2 *= d2
+        dlon = q_lo[s:e, None] - f_lo[None, :]
+        np.abs(dlon, out=dlon)
+        if wrap:
+            np.subtract(K.LON_WORLD, dlon, out=dlon,
+                        where=dlon > K.LON_WORLD // 2)
+        dlon *= dlon
+        d2 += dlon
+        part, pd2 = _topk_block(d2, f_id, kk)
+        yield s, e, part, pd2
+
+
+def _knn_broadcast(points: DataFrame, feats, k: int, key: str) -> DataFrame:
+    """Exact kNN in one mapInPandas pass against the collected feature
+    frame ``feats`` (feature_id, lat, lon): the arrays ship to each
     executor once; distances + top-k run vectorized in numpy per batch.
-    Zero shuffles, zero joins — the right plan whenever the feature layer
-    fits in executor memory (~<=200k rows).  Chunked so the distance
-    matrix stays ~chunk×n_features int64."""
+    Zero shuffles, zero joins."""
     import pandas as pd
 
-    rows = features.select("feature_id", "lat", "lon").collect()
-    fid = np.array([r.feature_id for r in rows], np.int64)
-    fla = np.array([r.lat for r in rows], np.int64)
-    flo = np.array([r.lon for r in rows], np.int64)
-    # deterministic tie-break (dist2, feature_id): pre-sort by id so that
-    # stable kind='stable' argsort resolves equal distances by id
-    o = np.argsort(fid, kind="stable")
-    fid, fla, flo = fid[o], fla[o], flo[o]
-    bc = points.sparkSession.sparkContext.broadcast((fid, fla, flo))
-    kk = min(k, len(fid))
-    if not chunk:
-        # keep each distance block ~2 MB so 32 concurrent workers stay
-        # cache-resident instead of fighting for memory bandwidth
-        chunk = max(256, (2 << 20) // (8 * max(len(fid), 1)))
-    # antimeridian wrap is only possible when some page-feature lon span
-    # can exceed 180° — precompute the feature extent for the fast path
-    f_lo_min, f_lo_max = (int(flo.min()), int(flo.max())) if len(flo) else (0, 0)
+    bc = points.sparkSession.sparkContext.broadcast(tuple(
+        feats[c].to_numpy(np.int64) for c in ("feature_id", "lat", "lon")))
 
     def fn(batches):
         f_id, f_la, f_lo = bc.value
         for pdf in batches:
             keys = pdf.iloc[:, 0].to_numpy()
-            la = pdf["lat"].to_numpy(np.int64)
-            lo = pdf["lon"].to_numpy(np.int64)
-            wrap = len(lo) > 0 and (
-                max(int(lo.max()), f_lo_max) - min(int(lo.min()), f_lo_min)
-                > K.LON_WORLD // 2)
-            outs = []
-            for s in range(0, len(keys), chunk):
-                e = min(s + chunk, len(keys))
-                # allocation-lean: 2 int64 blocks (+1 bool when wrapping)
-                # instead of ~5 — the block kernel is DRAM-bound
-                d2 = la[s:e, None] - f_la[None, :]
-                d2 *= d2
-                dlon = lo[s:e, None] - f_lo[None, :]
-                np.abs(dlon, out=dlon)
-                if wrap:
-                    np.subtract(K.LON_WORLD, dlon, out=dlon,
-                                where=dlon > K.LON_WORLD // 2)
-                dlon *= dlon
-                d2 += dlon
-                part, pd2 = _topk_block(d2, f_id, kk)
-                n = e - s
-                outs.append(pd.DataFrame({
-                    "k": np.repeat(keys[s:e], kk),
-                    "feature_id": f_id[part].ravel(),
-                    "dist2": pd2.ravel(),
-                    "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n),
-                }))
+            outs = [pd.DataFrame({
+                "k": np.repeat(keys[s:e], part.shape[1]),
+                "feature_id": f_id[part].ravel(),
+                "dist2": pd2.ravel(),
+                "rank": np.tile(np.arange(1, part.shape[1] + 1,
+                                          dtype=np.int32), e - s),
+            }) for s, e, part, pd2 in _block_topk(
+                pdf["lat"].to_numpy(np.int64), pdf["lon"].to_numpy(np.int64),
+                f_id, f_la, f_lo, k)]
             yield pd.concat(outs) if outs else pd.DataFrame({
                 "k": pd.array([], dtype="int64"),
                 "feature_id": pd.array([], dtype="int64"),
@@ -173,7 +174,7 @@ def knn_broadcast(points: DataFrame, features: DataFrame, k: int = 1,
     ).withColumnRenamed("k", key)
 
 
-def _residue_brute(features: DataFrame, residue_rows, k: int,
+def _residue_brute(features: DataFrame, residue, k: int,
                    key: str) -> DataFrame:
     """Exact kNN for a guarded-small point residue WITHOUT broadcasting
     the feature layer: the residue points (already collected, bounded by
@@ -184,44 +185,18 @@ def _residue_brute(features: DataFrame, residue_rows, k: int,
     BroadcastNestedLoopJoin appears in the plan."""
     import pandas as pd
 
-    pid = np.array([r[0] for r in residue_rows], np.int64)
-    pla = np.array([r[1] for r in residue_rows], np.int64)
-    plo = np.array([r[2] for r in residue_rows], np.int64)
-    bc = features.sparkSession.sparkContext.broadcast((pid, pla, plo))
-    p_lo_min, p_lo_max = int(plo.min()), int(plo.max())
+    bc = features.sparkSession.sparkContext.broadcast(tuple(
+        residue[c].to_numpy(np.int64) for c in (key, "lat", "lon")))
 
     def fn(batches):
         q_id, q_la, q_lo = bc.value
         for pdf in batches:
             fid = pdf["feature_id"].to_numpy(np.int64)
-            fla = pdf["flat"].to_numpy(np.int64)
-            flo = pdf["flon"].to_numpy(np.int64)
-            if not len(fid):
-                continue
-            wrap = (max(int(flo.max()), p_lo_max)
-                    - min(int(flo.min()), p_lo_min) > K.LON_WORLD // 2)
-            # chunk the query axis so each distance block stays ~2 MB
-            # (same bound knn_broadcast uses): |residue| × |arrow batch|
-            # can be 10k × 10k = 800 MB per int64 matrix unchunked —
-            # an executor-OOM exactly at the residue sizes the guard
-            # permits.  The kernel is DRAM-bound, so small blocks also
-            # keep it in cache.
-            qstep = max(256, (2 << 20) // (8 * len(fid)))
-            kk = min(k, len(fid))
-            for s in range(0, len(q_id), qstep):
-                e = min(s + qstep, len(q_id))
-                d2 = q_la[s:e, None] - fla[None, :]
-                d2 *= d2
-                dlon = q_lo[s:e, None] - flo[None, :]
-                np.abs(dlon, out=dlon)
-                if wrap:
-                    np.subtract(K.LON_WORLD, dlon, out=dlon,
-                                where=dlon > K.LON_WORLD // 2)
-                dlon *= dlon
-                d2 += dlon
-                part, pd2 = _topk_block(d2, fid, kk)
+            for s, e, part, pd2 in _block_topk(
+                    q_la, q_lo, fid, pdf["flat"].to_numpy(np.int64),
+                    pdf["flon"].to_numpy(np.int64), k):
                 yield pd.DataFrame({
-                    "k": np.repeat(q_id[s:e], kk),
+                    "k": np.repeat(q_id[s:e], part.shape[1]),
                     "feature_id": fid[part].ravel(),
                     "dist2": pd2.ravel(),
                 })
@@ -264,35 +239,25 @@ def knn_join(
     cell_zoom: int = 8,
     radius: int = 2,
     key: str = "page_id",
-    exact: bool = True,
-    strategy: str = "auto",
-    n_features: int | None = None,
-    max_expansions: int = MAX_EXPANSIONS,
-    brute_residue_limit: int = BRUTE_RESIDUE_LIMIT,
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
-    """k nearest features (feature_id, flat, flon) for each point.
+    """k nearest features (feature_id, lat, lon) for each point.
 
-    Returns (key, feature_id, dist2, rank).  ``strategy='auto'`` picks
-    the broadcast-brute mapInPandas kernel when the feature layer is
-    small enough to ship (exact, shuffle-free); the cell-ring candidate
-    path (reference rtree.ml:209-258 analog) otherwise.  Pass
-    ``n_features`` (or an explicit ``strategy``) in production pipelines
-    to skip the auto-probe's bounded count at plan time.  ``exact=True``
-    certifies each point's result against the cell bound and retries
-    uncertified points at doubled radius (up to ``max_expansions``
-    rounds); a final residue larger than ``brute_residue_limit`` raises
-    (pick a larger radius / coarser cell_zoom) instead of risking a
-    quadratic pass — the residue brute itself never broadcasts the
-    feature layer (see _residue_brute)."""
-    if strategy == "auto" and n_features is not None:
-        strategy = "broadcast" if n_features <= BROADCAST_FEATURE_LIMIT else "cells"
-    if strategy == "broadcast" or (
-        strategy == "auto"
-        and features.limit(BROADCAST_FEATURE_LIMIT + 1).count()
-        <= BROADCAST_FEATURE_LIMIT
-    ):
-        return knn_broadcast(points, features, k, key)
+    Returns (key, feature_id, dist2, rank), ranked by (dist2,
+    feature_id).  One bounded Arrow collect of the feature layer picks
+    the path: a layer of at most ``BROADCAST_FEATURE_LIMIT`` rows ships
+    whole to the broadcast-brute mapInPandas kernel (exact,
+    shuffle-free); a larger one takes the cell-ring candidate path
+    (reference rtree.ml:209-258 analog), which certifies each point's
+    result against the cell bound and retries uncertified points at
+    doubled radius for up to ``MAX_EXPANSIONS`` rounds.  A final residue
+    larger than ``BRUTE_RESIDUE_LIMIT`` raises (pick a larger radius /
+    coarser cell_zoom) instead of risking a quadratic pass; the residue
+    brute itself never broadcasts the feature layer (see
+    _residue_brute)."""
+    small = features.select("feature_id", "lat", "lon").limit(
+        BROADCAST_FEATURE_LIMIT + 1).toPandas()
+    if len(small) <= BROADCAST_FEATURE_LIMIT:
+        return _knn_broadcast(points, small, k, key)
     # pmod also folds a point at exactly +180° (cx == 2^z) onto cell 0,
     # mirroring the feature-side wrap below — otherwise it could never
     # match a registered cell
@@ -314,21 +279,16 @@ def knn_join(
         )
     )
     cand = pts.join(F.broadcast(feats_reg), ["cx", "cy"], "inner")
-    ranked = _rank_topk(cand.select(key, "lat", "lon", "feature_id", "flat", "flon"), key, k)
-
-    if not exact:
-        return ranked.select(key, "feature_id", "dist2", "rank")
-
-    # the exact path consumes each round's ranked frame three times
-    # (certification agg, left_semi keep, left_anti carry-over) and the
-    # residue guard below drives the whole cascade eagerly — truncate
-    # lineage per round so those uses and the caller's action share one
-    # materialization instead of re-running the candidate join 2x(1+rounds)
-    # times (same per-round localCheckpoint idiom as CH contraction);
-    # checkpoint_rounds=False keeps the full logical tree visible for
-    # plan audits (tools/explain_plans.py) — execution semantics identical
-    if checkpoint_rounds:
-        ranked = ranked.localCheckpoint(eager=False)
+    # each round's ranked frame is consumed three times (certification
+    # agg, left_semi keep, left_anti carry-over) and the residue guard
+    # below drives the whole cascade eagerly — truncate lineage per
+    # round so those uses and the caller's action share one
+    # materialization instead of re-running the candidate join
+    # 2x(1+rounds) times (same per-round localCheckpoint idiom as CH
+    # contraction)
+    ranked = _rank_topk(
+        cand.select(key, "lat", "lon", "feature_id", "flat", "flon"), key, k
+    ).localCheckpoint(eager=False)
 
     # certification bound (see module docstring)
     stats = points.agg(F.min("lat"), F.max("lat")).collect()[0]
@@ -355,7 +315,7 @@ def knn_join(
     parts = [ranked.join(ck, key, "left_semi")]
     remaining = pts.join(ck, key, "left_anti")
     r = radius
-    for _ in range(max_expansions):
+    for _ in range(MAX_EXPANSIONS):
         r *= 2
         if 2 * r + 1 >= (1 << cell_zoom):
             break  # ring would wrap onto itself; residue pass is exact
@@ -363,23 +323,21 @@ def knn_join(
             _ring_candidates(remaining, feats, r, cell_zoom, key)
             .select(key, "lat", "lon", "feature_id", "flat", "flon"),
             key, k,
-        )
-        if checkpoint_rounds:
-            ranked_r = ranked_r.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         ck = certified_keys(ranked_r, r)
         parts.append(ranked_r.join(ck, key, "left_semi"))
         remaining = remaining.join(ck, key, "left_anti")
 
-    residue_rows = remaining.select(key, "lat", "lon").limit(
-        brute_residue_limit + 1).collect()
-    if len(residue_rows) > brute_residue_limit:
+    limit = BRUTE_RESIDUE_LIMIT
+    residue = remaining.select(key, "lat", "lon").limit(limit + 1).toPandas()
+    if len(residue) > limit:
         raise ValueError(
-            f"knn_join: >{brute_residue_limit} points still uncertified "
-            f"after {max_expansions} ring expansions (radius {radius}->{r}, "
+            f"knn_join: >{limit} points still uncertified "
+            f"after {MAX_EXPANSIONS} ring expansions (radius {radius}->{r}, "
             f"cell_zoom {cell_zoom}); pick a larger radius or coarser "
             "cell_zoom instead of risking a quadratic brute pass")
-    if residue_rows:
-        parts.append(_residue_brute(features, residue_rows, k, key))
+    if len(residue):
+        parts.append(_residue_brute(features, residue, k, key))
     out = parts[0].select(key, "feature_id", "dist2", "rank")
     for p in parts[1:]:
         out = out.unionByName(p.select(key, "feature_id", "dist2", "rank"))

@@ -512,7 +512,6 @@ def spatial_join_partitioned(
     z: int = DEFAULT_CELL_ZOOM,
     how: str = "inner",
     page_key: str = "page_id",
-    n_partitions: int | None = None,
     salt: int = 1,
     pages_clustered: bool = False,
 ) -> DataFrame:
@@ -529,9 +528,8 @@ def spatial_join_partitioned(
     layout) and skips the exchange entirely — the zero-shuffle
     co-located spatial join.  Returns (page_key, feature_id) like
     ``spatial_join``."""
-    spark = pages.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_partitions = int(pages.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
     meta = _read_layer_meta(layer_path)
     if meta is not None:
         if meta["z"] != z:

@@ -373,8 +373,7 @@ def warc_index(spark: SparkSession, path: str) -> DataFrame:
         if bad.isEmpty():
             return raw.withColumn("compressed",
                                   F.lit(path.endswith(".gz")))
-    if path.endswith(".gz") and _fsize(path) >= int(os.environ.get(
-            "OSM_SPARK_WARC_WALK_DISTRIBUTED_MIN", WALK_DISTRIBUTED_MIN)):
+    if path.endswith(".gz") and _fsize(path) >= WALK_DISTRIBUTED_MIN:
         return warc_index_gz_distributed(spark, path)
     rows = pd.DataFrame(iter_warc_index(path),
                         columns=["offset", "size", "compressed"])

@@ -7,6 +7,7 @@ import pytest
 
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
+from osm_spark.operators import knn as KNN
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
 from osm_spark.operators.knn import brute_force_knn, knn_join
@@ -98,7 +99,21 @@ def test_zoom_cutoff_filters_small_features(spark):
     assert all(f < 5 or f >= 35 for f in z6_feats), z6_feats
 
 
-def test_knn_exact_matches_bruteforce(spark, geo_pages):
+@pytest.fixture(params=["broadcast", "cells"])
+def knn_path(request, monkeypatch):
+    """Run a kNN test on both physical paths: a zero broadcast limit
+    sends every feature layer down the cell-ring path."""
+    if request.param == "cells":
+        monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
+    return request.param
+
+
+@pytest.fixture
+def cells_only(monkeypatch):
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
+
+
+def test_knn_exact_matches_bruteforce(spark, geo_pages, knn_path):
     feats = geocode_ids(
         spark.range(40).withColumnRenamed("id", "feature_id"), "feature_id"
     )
@@ -114,8 +129,9 @@ def test_knn_exact_matches_bruteforce(spark, geo_pages):
     assert len({p for p, *_ in got}) == N_PAGES
 
 
-def test_knn_sparse_features_fallback(spark, geo_pages):
-    # only 2 features: almost every point is uncertified -> brute force path
+def test_knn_sparse_features_fallback(spark, geo_pages, knn_path):
+    # only 2 features: on the cell path almost every point is
+    # uncertified -> ring retries and the residue brute pass
     feats = geocode_ids(spark.range(2).withColumnRenamed("id", "feature_id"), "feature_id")
     got = {
         (r.page_id, r.feature_id)
@@ -128,7 +144,7 @@ def test_knn_sparse_features_fallback(spark, geo_pages):
     assert got == want
 
 
-def test_knn_cells_exact_expanding_rings(spark, geo_pages):
+def test_knn_cells_exact_expanding_rings(spark, geo_pages, cells_only):
     """Force the cell path with features so sparse that round-1
     certification fails for most points: expanding-ring retries (and the
     residue brute) must still match the brute-force oracle exactly."""
@@ -136,8 +152,8 @@ def test_knn_cells_exact_expanding_rings(spark, geo_pages):
                         "feature_id")
     got = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
-        for r in knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1,
-                          strategy="cells", exact=True).collect()
+        for r in knn_join(geo_pages, feats, k=1, cell_zoom=8,
+                          radius=1).collect()
     }
     want = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
@@ -147,17 +163,18 @@ def test_knn_cells_exact_expanding_rings(spark, geo_pages):
     assert len({p for p, *_ in got}) == N_PAGES
 
 
-def test_knn_cells_exact_residue_only(spark, geo_pages):
-    """max_expansions=0: every uncertified point goes through the
+def test_knn_cells_exact_residue_only(spark, geo_pages, cells_only,
+                                      monkeypatch):
+    """MAX_EXPANSIONS=0: every uncertified point goes through the
     reverse-broadcast residue kernel (feature layer never broadcast);
     results still exact."""
+    monkeypatch.setattr(KNN, "MAX_EXPANSIONS", 0)
     feats = geocode_ids(spark.range(3).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     got = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
-        for r in knn_join(geo_pages, feats, k=2, cell_zoom=8, radius=1,
-                          strategy="cells", exact=True,
-                          max_expansions=0).collect()
+        for r in knn_join(geo_pages, feats, k=2, cell_zoom=8,
+                          radius=1).collect()
     }
     want = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
@@ -166,80 +183,83 @@ def test_knn_cells_exact_residue_only(spark, geo_pages):
     assert got == want
 
 
-def test_knn_residue_guard_raises(spark, geo_pages):
-    """A residue bigger than brute_residue_limit raises instead of
+def test_knn_residue_guard_raises(spark, geo_pages, cells_only, monkeypatch):
+    """A residue bigger than BRUTE_RESIDUE_LIMIT raises instead of
     risking a quadratic pass."""
+    monkeypatch.setattr(KNN, "MAX_EXPANSIONS", 0)
+    monkeypatch.setattr(KNN, "BRUTE_RESIDUE_LIMIT", 5)
     feats = geocode_ids(spark.range(2).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     with pytest.raises(ValueError, match="uncertified"):
-        knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1,
-                 strategy="cells", exact=True, max_expansions=0,
-                 brute_residue_limit=5)
+        knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1)
 
 
-def test_knn_cell_path_antimeridian(spark):
+@pytest.fixture
+def round_one_only(cells_only, monkeypatch):
+    """No ring retries and no residue: a point that round 1 does not
+    certify raises, so a broken antimeridian wrap cannot be rescued by
+    the later rounds."""
+    monkeypatch.setattr(KNN, "MAX_EXPANSIONS", 0)
+    monkeypatch.setattr(KNN, "BRUTE_RESIDUE_LIMIT", 0)
+
+
+def test_knn_cell_path_antimeridian(spark, round_one_only):
     """Cell-ring candidates wrap at ±180°: a point at lon +179.99°
     finds a feature at -179.99° as its nearest neighbor."""
-    from pyspark.sql import functions as F
-
-    from osm_spark.operators.knn import knn_join
-
     pts = spark.createDataFrame(
         [(1, 100_000_000, 1_799_900_000)], "doc_id long, lat long, lon long")
     feats = spark.createDataFrame(
         [(7, 100_000_000, -1_799_900_000),   # 0.02° across the seam
          (8, 100_000_000, 1_500_000_000)],   # 30° away on the same side
         "feature_id long, lat long, lon long")
-    out = knn_join(pts, feats, k=1, cell_zoom=6, radius=1, key="doc_id",
-                   strategy="cells", exact=False).collect()
+    out = knn_join(pts, feats, k=1, cell_zoom=6, radius=1,
+                   key="doc_id").collect()
     assert out and out[0].feature_id == 7
 
 
 # ------------------------------------------------- review regressions
 
-def test_knn_broadcast_duplicate_feature_ties(spark):
+def test_knn_broadcast_duplicate_feature_ties(spark, knn_path):
     """Features at IDENTICAL coordinates: every path must pick the
     lower feature_id (the (dist2, feature_id) contract), including
     when argpartition's arbitrary boundary selection would not."""
-    from osm_spark.operators.knn import knn_broadcast
-
     pts = spark.createDataFrame(
         [(1, 10**6, 10**6)], "page_id long, lat long, lon long")
     # 4 co-located features; ids deliberately unsorted on input
     feats = spark.createDataFrame(
         [(9, 0, 0), (3, 0, 0), (7, 0, 0), (5, 0, 0)],
         "feature_id long, lat long, lon long")
-    got = knn_broadcast(pts, feats, k=2).orderBy("rank").collect()
+    got = knn_join(pts, feats, k=2).orderBy("rank").collect()
     assert [r.feature_id for r in got] == [3, 5]
     # and a far feature cannot displace a tied near one
     feats2 = spark.createDataFrame(
         [(9, 0, 0), (3, 0, 0), (1, 10**7, 10**7)],
         "feature_id long, lat long, lon long")
-    got2 = knn_broadcast(pts, feats2, k=2).orderBy("rank").collect()
+    got2 = knn_join(pts, feats2, k=2).orderBy("rank").collect()
     assert [r.feature_id for r in got2] == [3, 9]
 
 
-def test_knn_join_empty_points_exact(spark):
-    """exact=True on zero points returns empty instead of crashing on
-    the NULL lat stats."""
+def test_knn_join_empty_points_exact(spark, cells_only):
+    """The cell path on zero points returns empty instead of crashing
+    on the NULL lat stats."""
     pts = spark.createDataFrame([], "page_id long, lat long, lon long")
     feats = spark.createDataFrame(
         [(1, 0, 0)], "feature_id long, lat long, lon long")
-    out = knn_join(pts, feats, k=1, exact=True, strategy="cells",
-                   n_features=1)
-    assert out.count() == 0
+    assert knn_join(pts, feats, k=1).count() == 0
 
 
-def test_knn_point_at_exact_antimeridian(spark):
+def test_knn_point_at_exact_antimeridian(spark, round_one_only):
     """lon = +180 deg exactly: the point's cell wraps to column 0 and
-    still finds the feature registered across the seam."""
+    still finds the feature registered across the seam, ahead of a
+    farther decoy on the point's own side."""
     lon180 = 180 * 10**7
     pts = spark.createDataFrame(
         [(1, 0, lon180)], "page_id long, lat long, lon long")
     feats = spark.createDataFrame(
-        [(42, 0, -lon180 + 10**5)], "feature_id long, lat long, lon long")
-    got = knn_join(pts, feats, k=1, exact=False, strategy="cells",
-                   n_features=1).collect()
+        [(42, 0, -lon180 + 10**5),          # 0.01° across the seam
+         (43, 0, lon180 - 10**6)],          # 0.1° away on the same side
+        "feature_id long, lat long, lon long")
+    got = knn_join(pts, feats, k=1).collect()
     assert len(got) == 1 and got[0].feature_id == 42
 
 

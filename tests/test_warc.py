@@ -339,7 +339,7 @@ def test_large_gz_auto_uses_distributed_walk(spark, tmp_path, monkeypatch):
     import os as _os
     if _os.path.exists(p + ".cdx"):
         _os.remove(p + ".cdx")
-    monkeypatch.setenv("OSM_SPARK_WARC_WALK_DISTRIBUTED_MIN", "1")
+    monkeypatch.setattr(warc, "WALK_DISTRIBUTED_MIN", 1)
     idx = warc.warc_index(spark, p)
     assert idx.count() == 1 + 2 * WF.N_PAGES
     assert warc.read_warc_pages(spark, p, ).count() > 0

@@ -198,30 +198,34 @@ def main():
         "side is small.\n\n"
         f"```\n{plan_e2e.strip()}\n```\n")
 
-    # 4. kNN cell path: broadcast of the registered feature cells
+    # 4. kNN cell path: round 1 broadcasts the radius-registered feature
+    # cells; the exact fallback (expanding rings + residue) must never
+    # broadcast the feature layer (a brute pass written as
+    # crossJoin(broadcast(ALL features)) plans a BroadcastNestedLoopJoin).
+    # A zero broadcast limit forces the cell path for 64 features.
+    # knn_join localCheckpoints each ring round, which would show every
+    # round as a Scan ExistingRDD stub; the identity keeps the real
+    # unfolded round sub-trees in the plan (same operators, only the
+    # shared materialization is lost)
+    from unittest import mock
+
+    from osm_spark.operators import knn as KNN
+
     feats = geocode_ids(spark.range(64).withColumnRenamed("id", "feature_id"),
                         "feature_id")
-    knn = knn_join(geo, feats, k=1, cell_zoom=10, radius=1, key="doc_id",
-                   strategy="cells", exact=False)
+    with mock.patch.object(KNN, "BROADCAST_FEATURE_LIMIT", 0), \
+            mock.patch.object(type(geo), "localCheckpoint",
+                              lambda df, *a, **kw: df):
+        knn = knn_join(geo, feats, k=1, cell_zoom=8, radius=1, key="doc_id")
     section(
         "kNN — cell-ring candidate path",
         knn,
-        "Feature cells broadcast (`BroadcastExchange` + BroadcastHashJoin); "
-        "pages never shuffle for candidate generation; the only wide op is "
-        "the per-point top-k window.",
+        "Round 1 broadcasts the radius-registered feature cells "
+        "(`BroadcastExchange` + BroadcastHashJoin, (2r+1)² rows per "
+        "feature); pages never shuffle for candidate generation.",
         must_contain=("BroadcastHashJoin",),
     )
-
-    # 4b. kNN exact path: expanding rings + residue — the fallback must
-    # never broadcast the feature layer (r4 finding: the old brute pass
-    # was crossJoin(broadcast(ALL features)) = BroadcastNestedLoopJoin)
-    # checkpoint_rounds=False: production checkpoints each round (so the
-    # executed plan per round is exactly the sub-tree audited here); the
-    # audit wants the full unfolded tree, not Scan ExistingRDD stubs
-    knn_exact = knn_join(geo, feats, k=1, cell_zoom=8, radius=1,
-                         key="doc_id", strategy="cells", exact=True,
-                         checkpoint_rounds=False)
-    plan = fmt(knn_exact)
+    plan = fmt(knn)
     checks.append(("kNN — exact fallback (expanding rings + residue)",
                    "no CartesianProduct", "CartesianProduct" not in plan))
     checks.append(("kNN — exact fallback (expanding rings + residue)",
@@ -230,13 +234,13 @@ def main():
     sections.append(
         "## kNN — exact fallback: expanding rings + reverse-broadcast "
         "residue\n\n"
-        "Uncertified points retry through point-side ring explosion "
-        "(the feature layer never re-explodes or broadcasts); the final "
-        "guarded-small residue streams the features through MapInPandas "
-        "with the residue POINTS broadcast — so the plan contains no "
-        "CartesianProduct and no BroadcastNestedLoopJoin anywhere, i.e. "
-        "no full-layer broadcast on any kNN path.\n\n"
-        f"```\n{plan.strip()}\n```\n")
+        "Checked on the plan above.  Uncertified points retry through "
+        "point-side ring explosion (the feature layer never re-explodes); "
+        "the final guarded-small residue streams the features through "
+        "MapInPandas with the residue POINTS broadcast — so the plan "
+        "contains no CartesianProduct and no BroadcastNestedLoopJoin "
+        "anywhere, i.e. the brute fallback never broadcasts the feature "
+        "layer.\n")
 
     # 5. viewport tile pruning
     tiles = T.page_tiles_exact(
