@@ -343,12 +343,3 @@ def knn_join(
         out = out.unionByName(p.select(key, "feature_id", "dist2", "rank"))
     return out
 
-
-def brute_force_knn(points: DataFrame, features: DataFrame, k: int = 1,
-                    key: str = "page_id") -> DataFrame:
-    """Baseline: broadcast cross-join + window top-k (oracle path)."""
-    feats = features.select(
-        "feature_id", F.col("lat").alias("flat"), F.col("lon").alias("flon")
-    )
-    cand = points.select(key, "lat", "lon").crossJoin(F.broadcast(feats))
-    return _rank_topk(cand, key, k).select(key, "feature_id", "dist2", "rank")

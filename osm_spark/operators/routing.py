@@ -7,21 +7,28 @@ DataFrame programs:
   with haversine length and direction flags from a routing profile
   (/root/reference/osm/highway.ml:152-246; direction logic 218-237,
   BIDIR=3 / FWD=2 / BWD=1).
-- X3/X4 witness search + node contraction: per-node local Dijkstra over
-  the node's 1-hop neighbourhood subgraph inside an ``applyInPandas``
-  UDF (/root/reference/osm/contraction.ml:261-310, 345-495).  The
-  reference searches the full graph with bounds; restricting witnesses
-  to the 1-hop subgraph can only ADD shortcuts, never drop a needed
-  one, so shortest-path preservation is unconditional.
+- X3/X4 witness search + node contraction: one shortcut simulation
+  (``_shortcuts``, bounded witness Dijkstra per in-edge;
+  /root/reference/osm/contraction.ml:261-310, 345-495) over a witness
+  graph without the node.  The distributed rounds give it the node's
+  1-hop neighbourhood subgraph inside an ``applyInPandas`` UDF; the
+  driver-local finish gives it the live residual graph.  The reference
+  searches the full graph with bounds; restricting witnesses to the
+  1-hop subgraph can only ADD shortcuts, never drop a needed one, so
+  shortest-path preservation is unconditional.
 - X5 independent-set batched contraction: each round contracts every
   node whose (priority, hash, id) beats all 1- and 2-hop neighbours
   (/root/reference/osm/contraction.ml:557-660) — already data-parallel
   in the reference; here it is a driver loop of DataFrame stages with a
-  parquet/Iceberg checkpoint per round (north-rule: resumable, with
-  per-round row-count/byte metrics).
-- X6/X7: rank-ordered output edges + a driver-side bidirectional CH
-  query used by the tests to prove distance preservation vs plain
-  Dijkstra.
+  parquet checkpoint per round (north-rule: resumable, with per-round
+  row-count/byte metrics).  A checkpoint dir always resumes from its
+  last complete round; use a fresh dir for a fresh run.
+- X6/X7: rank-ordered output edges + one bidirectional upward query
+  (``_bidir_upward``) behind both the driver-side ``ch_query_path`` and
+  the distributed ``ch_batch_routes``.
+
+Every search — witness, local witness, query — runs the one bounded
+``_dijkstra`` loop.
 
 Priority = depth + 2*edge_growth + 4*orig_edge_growth, the reference's
 formula (contraction.ml:345-423).  The tie-break hash replaces OCaml's
@@ -38,6 +45,7 @@ every round by the checkpoint write+read.
 
 from __future__ import annotations
 
+import heapq
 import json
 import time
 from dataclasses import dataclass, field
@@ -57,6 +65,12 @@ HASH_MOD = 1 << 31
 # default speed profile, km/h by category id (profile_car.ml:27-81 analog)
 DEFAULT_SPEEDS = {0: 130, 1: 110, 2: 90, 3: 70, 4: 50, 5: 30, 6: 10}
 
+# contract(): distributed rounds run while the active graph has more
+# than LOCAL_THRESHOLD edges, for at most MAX_ROUNDS rounds; both are
+# read at call time
+MAX_ROUNDS = 60
+LOCAL_THRESHOLD = 10_000
+
 
 def _hash_col(c):
     # reduce mod FIRST: ids can exceed 2^33 (planet OSM), and
@@ -71,14 +85,13 @@ def _hash_col(c):
 
 
 def extract_edges(way_refs: DataFrame, nodes: DataFrame,
-                  speeds: dict[int, int] | None = None,
                   speed_col: str | None = None) -> DataFrame:
     """way_refs(way_id, seq, node_id) + ways' category/oneway + node coords
     -> directed weighted edges.
 
     ``way_refs`` must also carry ``oneway`` (int: 0 both, 1 forward,
     -1 backward) plus either ``category`` (int, mapped through
-    ``speeds``) or — when ``speed_col`` is given, e.g. from
+    ``DEFAULT_SPEEDS``) or — when ``speed_col`` is given, e.g. from
     ``profile.apply_profile`` — a direct per-way speed column.  Output
     columns: (src, dst, length_mm, weight, flags) with one row per
     traversable direction; weight = length / speed (reference:
@@ -86,7 +99,6 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
     """
     from osm_spark.geo import kernels as K
 
-    speeds = speeds or DEFAULT_SPEEDS
     cat_cols = [speed_col] if speed_col else ["category"]
     w = Window.partitionBy("way_id").orderBy("seq")
     segs = (
@@ -117,7 +129,7 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
         speed_expr = F.col(speed_col)
     else:
         speed_expr = F.element_at(
-            F.create_map(*[F.lit(x) for kv in speeds.items() for x in kv]),
+            F.create_map(*[F.lit(x) for kv in DEFAULT_SPEEDS.items() for x in kv]),
             F.col("category"),
         )
     segs = (
@@ -166,12 +178,49 @@ _SIM_SCHEMA = (
 MAX_SIM_DEGREE = 64
 
 
-def _simulate_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Simulate contracting node v: local witness Dijkstra over the 1-hop
-    neighbourhood subgraph (contraction.ml:261-310), emit needed
-    shortcuts + growth stats."""
-    import heapq
+def _dijkstra(start: int, nbrs, limit: float = np.inf) -> tuple[dict, dict]:
+    """The one Dijkstra loop: bounded witness searches
+    (contraction.ml:261-310) and unbounded upward CH searches
+    (routing.ml:49-79).  ``nbrs(x)`` yields x's (y, weight) out-edges;
+    no distance above ``limit`` is recorded.  Returns (dist, parents)
+    over every node reached."""
+    dist = {start: 0.0}
+    par: dict[int, int] = {}
+    pq = [(0.0, start)]
+    while pq:
+        d0, x = heapq.heappop(pq)
+        if d0 > dist[x]:
+            continue
+        for y, w in nbrs(x):
+            nd = d0 + w
+            if nd <= limit and nd < dist.get(y, np.inf):
+                dist[y] = nd
+                par[y] = x
+                heapq.heappush(pq, (nd, y))
+    return dist, par
 
+
+def _shortcuts(ins, outs, nbrs) -> list[tuple]:
+    """Shortcuts needed to contract node v: ``ins`` its (u, weight, orig)
+    in-edges, ``outs`` its (w, weight, orig) out-edges, ``nbrs`` the
+    out-edge lookup of a witness graph in which v has no out-edges.  Per
+    u (in-edge order), one Dijkstra bounded by the longest u->v->w
+    detour; every w (out-edge order) without a witness that short gets a
+    (u, w, weight, orig) shortcut.  A smaller witness graph can only add
+    shortcuts."""
+    shortcuts = []
+    for u, w_uv, o_uv in ins:
+        via_v = [(w, w_uv + w_vw, o_uv + o_vw) for w, w_vw, o_vw in outs if w != u]
+        if via_v:
+            dist, _ = _dijkstra(u, nbrs, max(sw for _, sw, _ in via_v))
+            shortcuts += [(u, w, sw, so) for w, sw, so in via_v
+                          if dist.get(w, np.inf) > sw]
+    return shortcuts
+
+
+def _simulate_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Simulate contracting node v with its 1-hop neighbourhood subgraph
+    as witness graph; emit needed shortcuts + growth stats."""
     v = int(pdf["v"].iloc[0])
     inc = pdf[pdf["is_incident"]]
     among = pdf[~pdf["is_incident"]]
@@ -185,46 +234,23 @@ def _simulate_group(pdf: pd.DataFrame) -> pd.DataFrame:
         })
     # adjacency of the neighbourhood subgraph, v excluded
     adj: dict[int, list[tuple[int, float]]] = {}
-    for s, d, wt in zip(among["src"], among["dst"], among["weight"]):
-        adj.setdefault(int(s), []).append((int(d), float(wt)))
+    for s, d, wt in zip(among["src"].tolist(), among["dst"].tolist(),
+                        among["weight"].tolist()):
+        adj.setdefault(s, []).append((d, wt))
 
-    in_pairs = list(zip(in_e["src"].astype(np.int64),
-                        in_e["weight"].astype(float),
-                        in_e["orig"].astype(int)))
-    out_pairs = list(zip(out_e["dst"].astype(np.int64),
-                         out_e["weight"].astype(float),
-                         out_e["orig"].astype(int)))
-    shortcuts = []
-    for u, w_uv, o_uv in in_pairs:
-        targets = {int(w): (w_uv + w_vw, o_uv + o_vw)
-                   for w, w_vw, o_vw in out_pairs if int(w) != int(u)}
-        if not targets:
-            continue
-        limit = max(t[0] for t in targets.values())
-        # bounded Dijkstra from u over the neighbourhood subgraph
-        dist = {int(u): 0.0}
-        pq = [(0.0, int(u))]
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf) or d0 > limit:
-                continue
-            for y, wt in adj.get(x, ()):
-                nd = d0 + wt
-                if nd < dist.get(y, np.inf) and nd <= limit:
-                    dist[y] = nd
-                    heapq.heappush(pq, (nd, y))
-        for w, (sc_w, sc_o) in targets.items():
-            if dist.get(w, np.inf) > sc_w:  # no witness -> shortcut needed
-                shortcuts.append((u, w, sc_w, sc_o))
-
+    ins = list(zip(in_e["src"].tolist(), in_e["weight"].tolist(),
+                   in_e["orig"].tolist()))
+    outs = list(zip(out_e["dst"].tolist(), out_e["weight"].tolist(),
+                    out_e["orig"].tolist()))
+    shortcuts = _shortcuts(ins, outs, lambda x: adj.get(x, ()))
     return pd.DataFrame(
         {
             "node": [v],
-            "n_in": [len(in_pairs)],
-            "n_out": [len(out_pairs)],
+            "n_in": [len(ins)],
+            "n_out": [len(outs)],
             "n_shortcuts": [len(shortcuts)],
-            "orig_in_out": [int(in_e["orig"].sum() + out_e["orig"].sum())],
-            "orig_shortcuts": [int(sum(s[3] for s in shortcuts))],
+            "orig_in_out": [sum(o for _, _, o in ins + outs)],
+            "orig_shortcuts": [sum(s[3] for s in shortcuts)],
             "deferred": [False],
             "shortcuts": [shortcuts],
         }
@@ -287,54 +313,30 @@ def _contract_local(rows, rank_offset: int, depths0=None):
     (contraction.ml:439-495) — on a cluster this runs on the driver once
     the distributed rounds have shrunk the graph below the threshold.
     """
-    import heapq
+    # live residual graph: weights by direction, (orig, via) per edge
+    out_w: dict[int, dict[int, float]] = {}
+    in_w: dict[int, dict[int, float]] = {}
+    meta: dict[tuple[int, int], tuple[int, int | None]] = {}
 
-    out_e: dict[int, dict[int, tuple]] = {}
-    in_e: dict[int, dict[int, tuple]] = {}
+    def add(s, d, w, o, via):  # keep the lighter of parallel edges
+        if w < out_w.setdefault(s, {}).get(d, np.inf):
+            out_w[s][d] = in_w.setdefault(d, {})[s] = w
+            meta[(s, d)] = (o, via)
+
     for s, d, w, o, via in rows:
-        s, d = int(s), int(d)
-        cur = out_e.setdefault(s, {}).get(d)
-        if cur is None or w < cur[0]:
-            out_e.setdefault(s, {})[d] = (float(w), int(o), via)
-            in_e.setdefault(d, {})[s] = (float(w), int(o), via)
-    nodes = set(out_e) | set(in_e)
+        add(int(s), int(d), float(w), int(o), via)
+    nodes = set(out_w) | set(in_w)
     depth = {n: 0 for n in nodes}
     if depths0:
         depth.update({int(k): int(v) for k, v in depths0.items() if int(k) in nodes})
 
-    def witness_limit_dijkstra(u, excl, limit, targets):
-        dist = {u: 0.0}
-        pq = [(0.0, u)]
-        found = {}
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf) or d0 > limit:
-                continue
-            if x in targets:
-                found[x] = d0
-            for y, (w, _, _) in out_e.get(x, {}).items():
-                if y == excl:
-                    continue
-                nd = d0 + w
-                if nd < dist.get(y, np.inf) and nd <= limit:
-                    dist[y] = nd
-                    heapq.heappush(pq, (nd, y))
-        return found
-
     def simulate(v):
-        ins = [(u, w, o) for u, (w, o, _) in in_e.get(v, {}).items() if u != v]
-        outs = [(w_, wt, o) for w_, (wt, o, _) in out_e.get(v, {}).items() if w_ != v]
-        shortcuts = []
-        for u, w_uv, o_uv in ins:
-            targets = {w_: (w_uv + w_vw, o_uv + o_vw)
-                       for w_, w_vw, o_vw in outs if w_ != u}
-            if not targets:
-                continue
-            limit = max(t[0] for t in targets.values())
-            found = witness_limit_dijkstra(u, v, limit, set(targets))
-            for w_, (sw, so) in targets.items():
-                if found.get(w_, np.inf) > sw:
-                    shortcuts.append((u, w_, sw, so))
+        ins = [(u, w, meta[(u, v)][0]) for u, w in in_w.get(v, {}).items() if u != v]
+        outs = [(x, w, meta[(v, x)][0]) for x, w in out_w.get(v, {}).items() if x != v]
+        # witness graph: the residual graph with v's out-edges cut, so
+        # no witness path passes through v
+        shortcuts = _shortcuts(
+            ins, outs, lambda x: () if x == v else out_w.get(x, {}).items())
         eg = len(shortcuts) - len(ins) - len(outs)
         og = sum(s[3] for s in shortcuts) - sum(o for _, _, o in ins) \
             - sum(o for _, _, o in outs)
@@ -357,34 +359,24 @@ def _contract_local(rows, rank_offset: int, depths0=None):
             heapq.heappush(pq, (p, h, v))
             continue
         ranks[v] = rank
-        nbrs = (set(in_e.get(v, {})) | set(out_e.get(v, {}))) - {v}
-        for u, (w, o, via) in list(in_e.get(v, {}).items()):
-            frozen.append((u, v, w, o, via))
-            out_e.get(u, {}).pop(v, None)
-        for w_, (wt, o, via) in list(out_e.get(v, {}).items()):
-            frozen.append((v, w_, wt, o, via))
-            in_e.get(w_, {}).pop(v, None)
-        out_e.pop(v, None)
-        in_e.pop(v, None)
-        for u, w_, sw, so in shortcuts:
-            cur = out_e.setdefault(u, {}).get(w_)
-            if cur is None or sw < cur[0]:
-                out_e.setdefault(u, {})[w_] = (sw, so, v)
-                in_e.setdefault(w_, {})[u] = (sw, so, v)
+        nbrs = (set(in_w.get(v, {})) | set(out_w.get(v, {}))) - {v}
+        for u, w in list(in_w.get(v, {}).items()):
+            frozen.append((u, v, w, *meta[(u, v)]))
+            out_w.get(u, {}).pop(v, None)
+        for x, w in list(out_w.get(v, {}).items()):
+            frozen.append((v, x, w, *meta[(v, x)]))
+            in_w.get(x, {}).pop(v, None)
+        out_w.pop(v, None)
+        in_w.pop(v, None)
+        for u, x, sw, so in shortcuts:
+            add(u, x, sw, so, v)
         for n in nbrs:
             depth[n] = max(depth[n], depth[v] + 1)
         rank += 1
     return frozen, ranks
 
 
-def contract(
-    edges: DataFrame,
-    checkpoint_dir: str | None = None,
-    max_rounds: int = 60,
-    resume: bool = True,
-    local_threshold: int = 10_000,
-    finish_local: bool = True,
-) -> CHResult:
+def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     """Full CH preprocessing: iterative independent-set contraction
     (contraction.ml:557-660) as a checkpointed DataFrame loop, with a
     driver-local finish for the residual core.
@@ -392,18 +384,19 @@ def contract(
     ``edges``: directed (src, dst, weight).  When ``checkpoint_dir`` is
     set, every round writes delta checkpoints to parquet — the frozen
     output edges and new ranks of that round, plus the full (small,
-    shrinking) active edge set and node depths — and the loop resumes
-    from the last complete round if ``resume``.  Per-round metrics go to
-    ``metrics.jsonl``.  Deltas keep total checkpoint I/O linear in the
-    edge count rather than quadratic in rounds.
+    shrinking) active edge set and node depths — and a later call with
+    the same dir resumes from the last complete round (or returns the
+    final result); use a fresh dir for a fresh run.  Per-round metrics
+    go to ``metrics.jsonl``.  Deltas keep total checkpoint I/O linear in
+    the edge count rather than quadratic in rounds.
 
     Distributed rounds run while the active graph has more than
-    ``local_threshold`` edges; the long tail (independent sets shrink
-    geometrically, so late rounds touch a tiny core) is finished
-    sequentially on the driver — the per-round cluster overhead would
-    dominate otherwise.  With ``finish_local=False`` and ``max_rounds``
-    hit, leftover nodes get arbitrary top ranks: the result is a valid
-    *resume point*, not a correct CH.
+    ``LOCAL_THRESHOLD`` edges, for at most ``MAX_ROUNDS`` rounds; the
+    long tail (independent sets shrink geometrically, so late rounds
+    touch a tiny core) is finished sequentially on the driver — the
+    per-round cluster overhead would dominate otherwise.  A residual
+    graph above 16 * ``LOCAL_THRESHOLD`` edges raises instead; the
+    checkpoint dir then holds the completed rounds as a resume point.
     """
     spark = edges.sparkSession
     ckpt = Path(checkpoint_dir) if checkpoint_dir else None
@@ -429,7 +422,7 @@ def contract(
     start_round = 0
     n_active = None
 
-    if ckpt and resume and (ckpt / "metrics.jsonl").exists():
+    if ckpt and (ckpt / "metrics.jsonl").exists():
         lines = [json.loads(x) for x in
                  (ckpt / "metrics.jsonl").read_text().splitlines() if x]
         if (ckpt / "final" / "edges" / "_SUCCESS").exists():
@@ -456,9 +449,8 @@ def contract(
         active = active.localCheckpoint()
         n_active = active.count()
 
-    rnd = start_round
-    for rnd in range(start_round, max_rounds):
-        if n_active == 0 or (finish_local and n_active <= local_threshold):
+    for rnd in range(start_round, MAX_ROUNDS):
+        if n_active <= LOCAL_THRESHOLD:
             break
         t0 = time.time()
         nh = _neighbourhoods(active)
@@ -595,16 +587,16 @@ def contract(
     done = done.select("src", "dst", "weight", "orig", "via")
     rank_offset = (metrics[-1]["round"] + 1) if metrics else 0
 
-    if finish_local and n_active > 0:
-        if n_active > 16 * local_threshold:
+    if n_active > 0:
+        if n_active > 16 * LOCAL_THRESHOLD:
             # a stalled distributed phase (dense core above
-            # MAX_SIM_DEGREE, or max_rounds hit) must not dump an
+            # MAX_SIM_DEGREE, or MAX_ROUNDS hit) must not dump an
             # unbounded residual graph on the driver
             raise RuntimeError(
                 f"distributed contraction stalled with {n_active} active "
-                f"edges (> 16 * local_threshold={local_threshold}); raise "
-                "max_rounds/local_threshold, or pass finish_local=False "
-                "to keep the checkpoint as a resume point")
+                f"edges (> 16 * LOCAL_THRESHOLD={LOCAL_THRESHOLD}); raise "
+                "MAX_ROUNDS/LOCAL_THRESHOLD; the checkpoint dir, if any, "
+                "keeps the completed rounds as a resume point")
         # residual core: sequential CH on the driver (see docstring)
         t0 = time.time()
         depth_rows = {r.node: r.depth for r in depths.collect()}
@@ -620,7 +612,6 @@ def contract(
             [(int(n), int(r)) for n, r in rank_map.items()], "node long, rank long")
         done = done.unionByName(local_done)
         ranks = ranks.unionByName(local_ranks)
-        active = active.filter(F.lit(False))
         m = {"round": rank_offset, "local_finish": True,
              "core_edges": len(core_rows), "core_nodes": len(rank_map),
              "wall_s": round(time.time() - t0, 3), "complete": True}
@@ -628,51 +619,31 @@ def contract(
             with open(ckpt / "metrics.jsonl", "a") as f:
                 f.write(json.dumps(m) + "\n")
         metrics.append(m)
-        ranks_all = ranks
-    else:
-        # leftover nodes (max_rounds hit, no local finish): unique top
-        # ranks by id — a resume point, not a correct CH (see docstring)
-        leftover = (
-            active.select(F.col("src").alias("node"))
-            .unionByName(active.select(F.col("dst").alias("node")))
-            .distinct()
-            .join(ranks, "node", "left_anti")
-        )
-        top = leftover.withColumn(
-            "rank",
-            F.lit(2_000_000)
-            + F.row_number().over(Window.orderBy("node")).cast("long"),
-        )
-        ranks_all = ranks.unionByName(top.select("node", "rank"))
 
-    all_edges = done.unionByName(
-        active.select("src", "dst", "weight", "orig", "via")
-    ).dropDuplicates(["src", "dst", "weight"])
-    rk = ranks_all
     out = (
-        all_edges
-        .join(rk.select(F.col("node").alias("src"), F.col("rank").alias("rank_src")),
-              "src")
-        .join(rk.select(F.col("node").alias("dst"), F.col("rank").alias("rank_dst")),
-              "dst")
+        done.dropDuplicates(["src", "dst", "weight"])
+        .join(ranks.select(F.col("node").alias("src"),
+                           F.col("rank").alias("rank_src")), "src")
+        .join(ranks.select(F.col("node").alias("dst"),
+                           F.col("rank").alias("rank_dst")), "dst")
     )
-    if ckpt and finish_local:
+    if ckpt:
         out.write.mode("overwrite").parquet(str(ckpt / "final" / "edges"))
-        ranks_all.write.mode("overwrite").parquet(str(ckpt / "final" / "ranks"))
+        ranks.write.mode("overwrite").parquet(str(ckpt / "final" / "ranks"))
         out = spark.read.parquet(str(ckpt / "final" / "edges"))
-        ranks_all = spark.read.parquet(str(ckpt / "final" / "ranks"))
-    return CHResult(edges=out, ranks=ranks_all, metrics=metrics,
+        ranks = spark.read.parquet(str(ckpt / "final" / "ranks"))
+    return CHResult(edges=out, ranks=ranks, metrics=metrics,
                     rounds=len(metrics))
 
 
 # ---------------------------------------------------------------------------
-# X7: bidirectional CH query (driver-side, for tests / point lookups)
+# X7: bidirectional upward CH query (driver point lookups + batch)
 
 
 def _build_upward(rows) -> tuple[dict, dict, dict]:
     """Upward adjacency + best-edge map from CH edge rows
     (src, dst, weight, via, rank_src, rank_dst) — the shared front half
-    of every CH query flavour (point, path, batch)."""
+    of every CH query (point and batch)."""
     up_fwd: dict[int, list[tuple[int, float]]] = {}
     up_bwd: dict[int, list[tuple[int, float]]] = {}
     edge_map: dict[tuple[int, int], tuple[float, int | None]] = {}
@@ -687,21 +658,7 @@ def _build_upward(rows) -> tuple[dict, dict, dict]:
     return up_fwd, up_bwd, edge_map
 
 
-def ch_query(ch_edges: list[tuple], s: int, t: int) -> float:
-    """Bidirectional Dijkstra over upward edges.
-
-    ``ch_edges``: rows (src, dst, weight, rank_src, rank_dst).  Returns
-    the shortest distance s->t (inf if unreachable).  Reference:
-    osm/routing.ml:49-79,148-172 (shortcut expansion not needed for
-    distance-only queries).
-    """
-    up_fwd, up_bwd, _ = _build_upward(
-        (src, dst, w, None, r_s, r_d) for src, dst, w, r_s, r_d in ch_edges)
-    best, _meet, _pf, _pb = _bidir_upward(up_fwd, up_bwd, int(s), int(t))
-    return best
-
-
-def expand_ch_edge(edge_map: dict, u: int, v: int) -> list[int]:
+def _expand_ch_edge(edge_map: dict, u: int, v: int) -> list[int]:
     """Recursively unpack the CH edge u->v to the real node sequence
     (excluding u).  The reference resolves the middle node by weight
     matching in its CSR arrays (osm/routing.ml:92-134 expand_edge); our
@@ -710,7 +667,7 @@ def expand_ch_edge(edge_map: dict, u: int, v: int) -> list[int]:
     _, via = edge_map[(u, v)]
     if via is None or via < 0:
         return [v]
-    return expand_ch_edge(edge_map, u, via) + expand_ch_edge(edge_map, via, v)
+    return _expand_ch_edge(edge_map, u, via) + _expand_ch_edge(edge_map, via, v)
 
 
 def ch_query_path(ch_edges: list[tuple], s: int, t: int) -> tuple[float, list[int]]:
@@ -719,7 +676,7 @@ def ch_query_path(ch_edges: list[tuple], s: int, t: int) -> tuple[float, list[in
 
     ``ch_edges``: rows (src, dst, weight, via, rank_src, rank_dst) from
     ``contract().edges``.  Returns (distance, [s, ..., t]) over ORIGINAL
-    graph nodes; ([], inf) if unreachable.  Reference:
+    graph nodes; (inf, []) if unreachable.  Reference:
     osm/routing.ml:49-79 (search), 92-145 (expansion).
     """
     up_fwd, up_bwd, edge_map = _build_upward(ch_edges)
@@ -735,26 +692,8 @@ def _bidir_upward(up_fwd: dict, up_bwd: dict, s: int, t: int):
     unreachable.  Pure-python on purpose — CH search spaces are tiny
     (that is the point of CH), so per-query heap work beats any
     vectorization that would have to ship frontier state."""
-    import heapq
-
-    def search(adj, start):
-        dist = {start: 0.0}
-        par: dict[int, int] = {}
-        pq = [(0.0, start)]
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf):
-                continue
-            for y, w in adj.get(x, ()):
-                nd = d0 + w
-                if nd < dist.get(y, np.inf):
-                    dist[y] = nd
-                    par[y] = x
-                    heapq.heappush(pq, (nd, y))
-        return dist, par
-
-    df, pf = search(up_fwd, int(s))
-    db, pb = search(up_bwd, int(t))
+    df, pf = _dijkstra(s, lambda x: up_fwd.get(x, ()))
+    db, pb = _dijkstra(t, lambda x: up_bwd.get(x, ()))
     best, meet = np.inf, None
     for x, d in df.items():
         if x in db and d + db[x] < best:
@@ -778,7 +717,7 @@ def _expand_pair_path(edge_map: dict, pf: dict, pb: dict,
         x = pb[x]
     path = [s]
     for u, v in up_chain + down_chain:
-        path.extend(expand_ch_edge(edge_map, u, v))
+        path.extend(_expand_ch_edge(edge_map, u, v))
     return path
 
 
@@ -801,70 +740,31 @@ def ch_batch_routes(pairs: DataFrame, ch_edges: DataFrame,
     seq, node, dist_r) exploded hops, same schema as the x7_ch_path
     driver row (unreachable pairs emit no rows).
     """
-    import pandas as pd
-
     rows = ch_edges.select("src", "dst", "weight", "via",
                            "rank_src", "rank_dst").collect()
     up_fwd, up_bwd, edge_map = _build_upward(rows)
     bc = pairs.sparkSession.sparkContext.broadcast(
         (up_fwd, up_bwd, edge_map if with_path else None))
-
     if with_path:
         schema = "src long, dst long, seq long, node long, dist_r double"
-
-        def fn(batches):
-            fwd, bwd, emap = bc.value
-            for pdf in batches:
-                out = []
-                for s, t in zip(pdf["src"], pdf["dst"]):
-                    s, t = int(s), int(t)
-                    d, meet, pf, pb = _bidir_upward(fwd, bwd, s, t)
-                    if meet is None:
-                        continue
-                    dr = round(d, 6)
-                    for i, nd in enumerate(
-                            _expand_pair_path(emap, pf, pb, s, t, meet)):
-                        out.append((s, t, i, int(nd), dr))
-                yield pd.DataFrame(
-                    out, columns=["src", "dst", "seq", "node", "dist_r"]
-                ) if out else pd.DataFrame({
-                    "src": pd.array([], dtype="int64"),
-                    "dst": pd.array([], dtype="int64"),
-                    "seq": pd.array([], dtype="int64"),
-                    "node": pd.array([], dtype="int64"),
-                    "dist_r": pd.array([], dtype="float64")})
     else:
         schema = "src long, dst long, dist_r double"
+    cols = [c.split()[0] for c in schema.split(", ")]
+    # typed even when empty (a batch of unreachable pairs in path mode)
+    dtypes = dict.fromkeys(cols, "int64") | {"dist_r": "float64"}
 
-        def fn(batches):
-            fwd, bwd, _ = bc.value
-            for pdf in batches:
-                ss = pdf["src"].astype("int64")
-                tt = pdf["dst"].astype("int64")
-                dd = [round(_bidir_upward(fwd, bwd, int(s), int(t))[0], 6)
-                      for s, t in zip(ss, tt)]
-                yield pd.DataFrame({"src": ss, "dst": tt,
-                                    "dist_r": pd.array(dd, dtype="float64")})
+    def fn(batches):
+        fwd, bwd, emap = bc.value
+        for pdf in batches:
+            out = []
+            for s, t in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+                d, meet, pf, pb = _bidir_upward(fwd, bwd, s, t)
+                dr = round(d, 6)
+                if not with_path:
+                    out.append((s, t, dr))
+                elif meet is not None:
+                    out.extend((s, t, i, nd, dr) for i, nd in enumerate(
+                        _expand_pair_path(emap, pf, pb, s, t, meet)))
+            yield pd.DataFrame(out, columns=cols).astype(dtypes)
 
     return pairs.select("src", "dst").mapInPandas(fn, schema)
-
-
-def dijkstra_ref(edge_rows: list[tuple], s: int) -> dict[int, float]:
-    """Plain-Dijkstra oracle over (src, dst, weight) rows (test baseline)."""
-    import heapq
-
-    adj: dict[int, list[tuple[int, float]]] = {}
-    for src, dst, w in edge_rows:
-        adj.setdefault(int(src), []).append((int(dst), float(w)))
-    dist = {int(s): 0.0}
-    pq = [(0.0, int(s))]
-    while pq:
-        d0, x = heapq.heappop(pq)
-        if d0 > dist.get(x, np.inf):
-            continue
-        for y, w in adj.get(x, ()):
-            nd = d0 + w
-            if nd < dist.get(y, np.inf):
-                dist[y] = nd
-                heapq.heappush(pq, (nd, y))
-    return dist

@@ -4,15 +4,25 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
 from osm_spark.operators import knn as KNN
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
-from osm_spark.operators.knn import brute_force_knn, knn_join
+from osm_spark.operators.knn import knn_join
 
 N_PAGES = 300
+
+
+def brute_force_knn(points, features, k=1, key="page_id"):
+    """Baseline: broadcast cross-join + window top-k (oracle path)."""
+    feats = features.select(
+        "feature_id", F.col("lat").alias("flat"), F.col("lon").alias("flon")
+    )
+    cand = points.select(key, "lat", "lon").crossJoin(F.broadcast(feats))
+    return KNN._rank_topk(cand, key, k).select(key, "feature_id", "dist2", "rank")
 
 
 @pytest.fixture(scope="module")
