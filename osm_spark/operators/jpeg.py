@@ -287,6 +287,8 @@ def encode_baseline(img: np.ndarray, quality: int = 75,
     ``dri`` > 0 emits a DRI segment and an RSTn marker (byte-aligned,
     predictors reset) after every ``dri`` MCUs — the restart-interval
     layout real crawl JPEGs use."""
+    if not 0 <= dri <= 0xFFFF:  # DRI carries a 16-bit interval
+        raise ValueError(f"JPEG: restart interval {dri} outside 0..65535")
     img = np.asarray(img, np.uint8)
     color = img.ndim == 3
     qt_y = quality_scale(QT_LUMA, quality)
@@ -543,13 +545,16 @@ def decode_jpeg_gray(b: bytes) -> np.ndarray:
         raise ValueError("JPEG: missing SOF/SOS")
     tables, data_pos = scan
 
+    # sampling factors are checked before they size the MCU grid: a 0
+    # would divide by zero below
+    if not comps or any(not (1 <= c["h"] <= 2 and 1 <= c["v"] <= 2)
+                        for c in comps):
+        raise ValueError("JPEG: sampling factors outside 1..2 unsupported")
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcu_x = -(-w0 // (8 * hmax))
     mcu_y = -(-h0 // (8 * vmax))
     for c in comps:
-        if not (1 <= c["h"] <= 2 and 1 <= c["v"] <= 2):
-            raise ValueError("JPEG: sampling factors beyond 2 unsupported")
         c["bw"] = mcu_x * c["h"]
         c["bh"] = mcu_y * c["v"]
         c["dc"], c["ac"] = tables[c["id"]]

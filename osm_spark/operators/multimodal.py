@@ -342,9 +342,9 @@ def decode_and_resize(media_df: DataFrame, width: int, height: int,
                 elif b[:2] == b"\xff\xd8":
                     # baseline-sequential decodes numpy-only; anything
                     # the built-in codec rejects (progressive/SOF2,
-                    # sampling >2, 16-bit quant, truncated scans) falls
-                    # through to PIL like every other non-built-in
-                    # format rather than failing the task
+                    # sampling outside 1..2, 16-bit quant, truncated
+                    # scans) falls through to PIL like every other
+                    # non-built-in format rather than failing the task
                     from osm_spark.operators.jpeg import decode_jpeg_gray
                     try:
                         px = decode_jpeg_gray(b)

@@ -6,6 +6,20 @@ Defaults chosen for the 100 TB design target (see SURVEY.md §4):
 - Arrow on (all geometry UDFs are pandas/Arrow-batched),
 - shuffle partitions sized to the local core count for tests; on a real
   cluster this is overridden via spark-submit conf.
+
+Local masters only, because there the Python workers share the driver's
+environment: the worker daemon is ``osm_spark.worker_daemon``, which forks
+workers with numpy/pandas/pyarrow and the engine modules already imported
+and their heap gc-frozen, and stops each task from re-reading pyspark.zip
+(a fixed ~0.3 CPU-s per Python task with the stock daemon on Python 3.11).
+The directory holding ``osm_spark`` is set as
+``spark.executorEnv.PYTHONPATH``, so the daemon and every engine UDF import
+from any working directory. Spark adds the driver's own ``$PYTHONPATH`` to
+the workers' after it; a ``spark.executorEnv.PYTHONPATH`` from
+spark-defaults.conf or ``PYSPARK_SUBMIT_ARGS`` is replaced, not merged
+(``extra_conf`` can still set it). Cluster masters, and any master given
+to spark-submit, keep the stock daemon: py-files reach executors per task,
+after the daemon has started.
 """
 
 from __future__ import annotations
@@ -13,6 +27,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -36,11 +52,19 @@ def get_spark(
     # only pin local[] / loopback when no cluster master was supplied:
     # programmatic master/driver.host would OVERRIDE spark-submit
     # --master yarn/k8s, blocking cluster deployment
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
 
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # started by spark-submit: SparkConf() is an empty dict until the
+        # driver attaches to that JVM, whose properties hold --master
+        SparkContext._ensure_initialized()
     if not SparkConf().contains("spark.master"):
-        builder = builder.master(f"local[{cores}]") \
+        builder = (
+            builder.master(f"local[{cores}]")
             .config("spark.driver.host", "127.0.0.1")
+            .config("spark.python.daemon.module", "osm_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _ROOT)
+        )
     builder = (
         builder
         .config("spark.driver.memory", driver_mem)

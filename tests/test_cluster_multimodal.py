@@ -503,6 +503,40 @@ def test_jpeg_truncated_scan_raises_clean_error():
     assert decode_jpeg_gray(b).shape == (64, 64)
 
 
+def test_jpeg_bad_sampling_factor_clean_error():
+    """An SOF0 sampling byte outside 1..2 raises the labelled ValueError
+    before it sizes the MCU grid, where 0x00 would divide by zero."""
+    import numpy as np
+    import pytest
+
+    from osm_spark.operators.jpeg import decode_jpeg_gray, encode_baseline
+
+    good = encode_baseline(np.full((16, 16), 90, np.uint8))
+    hv = good.find(b"\xff\xc0") + 11  # marker, length, P, Y, X, Nc, Ci
+    assert good[hv] == 0x11
+    for byte in (0x00, 0x10, 0x01, 0x31):
+        bad = bytearray(good)
+        bad[hv] = byte
+        with pytest.raises(ValueError, match="JPEG: sampling factors"):
+            decode_jpeg_gray(bytes(bad))
+
+
+def test_jpeg_encode_rejects_out_of_range_dri():
+    """DRI carries a 16-bit interval: values outside 0..65535 are refused
+    up front with a labelled ValueError, not an OverflowError after the
+    whole scan was encoded."""
+    import numpy as np
+    import pytest
+
+    from osm_spark.operators.jpeg import decode_jpeg_gray, encode_baseline
+
+    img = np.full((16, 16), 90, np.uint8)
+    for dri in (-1, 65536):
+        with pytest.raises(ValueError, match="restart interval"):
+            encode_baseline(img, dri=dri)
+    assert decode_jpeg_gray(encode_baseline(img, dri=65535)).shape == (16, 16)
+
+
 def test_jpeg_corrupt_streams_route_to_fallback(spark):
     """Corrupt (not merely truncated) streams raise KeyError/IndexError/
     ValueError from the parser — decode_and_resize must catch ALL of
