@@ -17,9 +17,16 @@ The directory holding ``osm_spark`` is set as
 from any working directory. Spark adds the driver's own ``$PYTHONPATH`` to
 the workers' after it; a ``spark.executorEnv.PYTHONPATH`` from
 spark-defaults.conf or ``PYSPARK_SUBMIT_ARGS`` is replaced, not merged
-(``extra_conf`` can still set it). Cluster masters, and any master given
-to spark-submit, keep the stock daemon: py-files reach executors per task,
-after the daemon has started.
+(``extra_conf`` can still set it). The driver JVM also keeps a fixed set
+of JIT compiler threads (``spark.driver.extraJavaOptions``, likewise
+replacing a value from spark-defaults.conf): HotSpot's default starts
+extra C2 threads under load and retires them when idle, and once a thread
+has exited its compile time can no longer be told apart from the rest of
+the JVM's CPU, so accounting that leaves JIT work out (perfbench's
+``tree_cpu``) counted it as work in whichever iteration the thread exited.
+Cluster masters, and any master given to spark-submit, keep the stock
+daemon and JVM options: py-files reach executors per task, after the
+daemon has started.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ import os
 from pyspark.sql import SparkSession
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_JIT_THREADS = "-XX:-UseDynamicNumberOfCompilerThreads"
 
 
 def get_spark(
@@ -64,6 +72,7 @@ def get_spark(
             .config("spark.driver.host", "127.0.0.1")
             .config("spark.python.daemon.module", "osm_spark.worker_daemon")
             .config("spark.executorEnv.PYTHONPATH", _ROOT)
+            .config("spark.driver.extraJavaOptions", _JIT_THREADS)
         )
     builder = (
         builder
